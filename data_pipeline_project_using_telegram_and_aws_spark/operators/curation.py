@@ -322,10 +322,12 @@ def curate_corpus(
             f"unknown near_dup_closure {near_dup_closure!r}; "
             "expected 'drop_all' or 'components'"
         )
-    # The MinHash-LSH candidate computation above is the pipeline's
-    # heaviest stage and feeds three consumers (this ledger slice, the
-    # quality branch's anti-join, the language branch's anti-join);
-    # checkpointing its small output runs it exactly once.
+    # The candidate computation above is the pipeline's heaviest stage
+    # and feeds three consumers (this ledger slice, the quality branch's
+    # anti-join, the language branch's anti-join); checkpointing its
+    # small output runs it once per pass instead of once per consumer.
+    # Inside it, each self-join's two sides share one exchange (the band
+    # rows, or the sized fingerprints), so signatures are computed once.
     if _CKPT_NEAR:
         near_drops = near_drops.localCheckpoint(eager=False)
     ledgers.append(near_drops)

@@ -31,7 +31,7 @@ codegen'd; measured 4-6× faster end-to-end than the
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 N_SALTS = 16  # minhash permutations (md5-salted lexicographic min)
 
@@ -269,6 +269,20 @@ def minhash_sig_array(
     )
 
 
+def _sig_match_fraction(n_salts: int) -> Column:
+    """Fraction of salts on which ``sig_a`` and ``sig_b`` agree: a flat
+    sum of ``n_salts`` null-safe equalities, one codegen'd projection
+    (the ``zip_with``/``filter`` form it replaces ran as interpreted
+    HOF lambdas on every candidate pair). ``get`` reads a missing
+    position as NULL, as ``zip_with`` pads a shorter array, so an index
+    signed with fewer salts scores the same instead of failing."""
+    matches = " + ".join(
+        f"cast(get(sig_a, {k}) <=> get(sig_b, {k}) AS INT)"
+        for k in range(n_salts)
+    )
+    return F.expr(matches) / F.lit(float(n_salts))
+
+
 def minhash_lsh_candidates(
     df: DataFrame, n: int = 3, n_salts: int = N_SALTS, rows_per_band: int = 2,
     id_col: str = "doc_id", text_col: str = "text",
@@ -280,29 +294,32 @@ def minhash_lsh_candidates(
     (band, md5(concat of the band's minhashes)). Only bucket collisions are
     paired — at 100 TB this is the difference between feasible and not.
 
-    Single-pass plan: the signature array is computed once (row-local, no
-    shuffle), band buckets are derived from it row-locally, and the full
-    signature rides through the band self-join so the estimated Jaccard is
-    a row-local ``zip_with`` on the joined pair — no post-hoc signature
-    re-join, no recomputation of the md5 work.
+    Plan: :func:`band_rows` (shingle explode, md5 signature aggregation,
+    band buckets) is built once and hash-partitioned by the join key
+    ``(band, bucket)``; both sides of the self-join select from that one
+    exchange, so AQE plans the second side as a ``ReusedExchange`` and the
+    signatures are computed once per pass. The join itself needs no
+    further exchange (a sort-merge band join shuffles both sides by these
+    keys anyway). The full signature rides through the join, so the
+    estimated Jaccard is a row-local sum of per-salt equalities — no
+    post-hoc signature re-join.
     """
-    # bucket string mirrors the exploded formulation (and the SQL oracle):
-    # sorted 'lpad(salt):minhash' entries of the band joined with ','
-    bands = band_rows(df, n, n_salts, rows_per_band, id_col, text_col)
+    bands = band_rows(
+        df, n, n_salts, rows_per_band, id_col, text_col
+    ).repartition("band", "bucket")
     left = bands.select(
         F.col(id_col).alias("doc_a"), F.col("sig").alias("sig_a"), "band", "bucket"
     )
     right = bands.select(
         F.col(id_col).alias("doc_b"), F.col("sig").alias("sig_b"), "band", "bucket"
     )
-    est = (
-        F.expr("size(filter(zip_with(sig_a, sig_b, (x, y) -> x <=> y), v -> v))")
-        / F.lit(float(n_salts))
-    )
     return (
         left.join(right, ["band", "bucket"])
         .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.round(est, 4).alias("est_jaccard"))
+        .select(
+            "doc_a", "doc_b",
+            F.round(_sig_match_fraction(n_salts), 4).alias("est_jaccard"),
+        )
         .groupBy("doc_a", "doc_b")  # dedup pairs colliding in >1 band
         .agg(F.max("est_jaccard").alias("est_jaccard"))
     )
@@ -316,15 +333,24 @@ def band_rows(
     index representation. Same bucket rule as
     :func:`minhash_lsh_candidates` (they must collide identically); the
     full signature rides along so a probe can estimate Jaccard
-    row-locally without a second signature join."""
+    row-locally without a second signature join.
+
+    Bucket string (mirrors the SQL oracle): the band's
+    ``lpad(salt, 4, '0') || ':' || minhash`` entries, sorted, joined with
+    ``','`` and md5'd. Each band is one flat expression over constant
+    salt indices, so the whole bucket array is a codegen'd projection —
+    no ``transform(sequence(...))`` lambdas per doc."""
     n_bands = n_salts // rows_per_band
     sigs = minhash_sig_array(df, n, n_salts, id_col, text_col)
-    buckets = F.expr(
-        f"transform(sequence(0, {n_bands - 1}), b -> "
-        f"md5(array_join(array_sort(transform(sequence(0, {rows_per_band - 1}), "
-        f"r -> concat(lpad(cast(b * {rows_per_band} + r as string), 4, '0'), "
-        f"':', element_at(sig, b * {rows_per_band} + r + 1)))), ',')))"
-    )
+
+    def bucket(b: int) -> str:
+        entries = ", ".join(
+            f"concat(lpad('{s}', 4, '0'), ':', sig[{s}])"
+            for s in range(b * rows_per_band, (b + 1) * rows_per_band)
+        )
+        return f"md5(array_join(sort_array(array({entries})), ','))"
+
+    buckets = F.expr(f"array({', '.join(bucket(b) for b in range(n_bands))})")
     return sigs.select(
         F.col(id_col), F.col("sig"), F.posexplode(buckets).alias("band", "bucket")
     )
@@ -365,10 +391,6 @@ def dedup_against_index(
     """
     probe = band_rows(new_docs, n, n_salts, rows_per_band, id_col, text_col)
     index = spark.table(table)
-    est = (
-        F.expr("size(filter(zip_with(sig_a, sig_b, (x, y) -> x <=> y), v -> v))")
-        / F.lit(float(n_salts))
-    )
     return (
         probe.select(
             F.col(id_col).alias("new_doc_id"),
@@ -388,7 +410,7 @@ def dedup_against_index(
         .select(
             "new_doc_id",
             "corpus_doc_id",
-            F.round(est, 4).alias("est_jaccard"),
+            F.round(_sig_match_fraction(n_salts), 4).alias("est_jaccard"),
         )
         .groupBy("new_doc_id", "corpus_doc_id")
         .agg(F.max("est_jaccard").alias("est_jaccard"))

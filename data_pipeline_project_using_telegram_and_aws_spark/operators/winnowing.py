@@ -71,10 +71,15 @@ def fingerprint_overlap(
     """All-pairs fingerprint overlap via the inverted index: (doc_a,
     doc_b, common, overlap) where overlap = common / min(|a|, |b|) — the
     containment-style score plagiarism detection ranks by. Join meets
-    only docs sharing a fingerprint (never a cross join)."""
+    only docs sharing a fingerprint (never a cross join).
+
+    The sized fingerprint rows are hash-partitioned by ``fingerprint``
+    once and both join sides select from that one exchange, so AQE
+    reuses it: the k-gram md5s, the winnowing window and the size
+    window run once per call, and the join needs no further exchange."""
     sized = fps.withColumn(
         "__n", F.count(F.lit(1)).over(Window.partitionBy(id_col))
-    )
+    ).repartition("fingerprint")
     a = sized.select(
         F.col(id_col).alias("doc_a"), F.col("__n").alias("size_a"), "fingerprint"
     )

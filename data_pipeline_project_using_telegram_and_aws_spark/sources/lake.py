@@ -149,7 +149,16 @@ class TelegramLake:
 
     def read_raw(self, spark: SparkSession, context_date: dt.date | str | None = None) -> DataFrame:
         """Read the raw zone; a date filter prunes to one partition
-        (the S3-prefix listing at ipynb:572, done by Catalyst here)."""
+        (the S3-prefix listing at ipynb:572, done by Catalyst here).
+
+        Which files are visible depends on the ingest route that owns the
+        raw root. The plain file-sink route
+        (``start_ingest_stream`` without a quarantine dir) keeps a commit
+        log in ``raw/telegram/_spark_metadata``; Spark then lists only the
+        files committed in that log, so files laid down beside it (a
+        backfill copied into ``context_date=D/``, say) are invisible here.
+        The quarantining route writes batch-keyed directories with no
+        commit log, so every file under the root is read."""
         from pyspark.sql import types as T
 
         # fresh StructType each call — StructType.add mutates in place

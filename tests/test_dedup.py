@@ -52,6 +52,27 @@ def test_minhash_estimates_track_true_jaccard(spark):
         assert cands[(1, 3)] >= 0.25
 
 
+def _final_plan_lines(df) -> list[str]:
+    """The AQE-final executed plan of ``df``, run to completion first."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0].splitlines()
+
+
+def test_lsh_band_self_join_computes_signatures_once(spark):
+    """Both sides of the (band, bucket) self-join read one exchange of
+    the band rows: the salted-md5 signature aggregation appears once in
+    the final plan, the second side is a ReusedExchange, and the bucket
+    keys and Jaccard estimate carry no interpreted lambda. A
+    one-partition input is the shape where each side would otherwise
+    re-run the shingle explode and the md5 mins."""
+    cands = D.minhash_lsh_candidates(_docs(spark).coalesce(1), n=3)
+    lines = _final_plan_lines(cands)
+    assert sum("partial_min(md5(" in ln for ln in lines) == 1, "\n".join(lines)
+    assert any("ReusedExchange" in ln for ln in lines), "\n".join(lines)
+    assert not any("lambdafunction" in ln for ln in lines), "\n".join(lines)
+
+
 def test_simhash_near_dups_have_close_fingerprints(spark):
     fps = {r.doc_id: r.simhash for r in D.simhash16(_docs(spark)).collect()}
     assert fps[1] == fps[2]                # identical text → identical hash
@@ -128,6 +149,19 @@ def test_incremental_dedup_against_persisted_index(spark):
     }
     for (n, c), est in hits.items():
         assert batch[(min(c, n), max(c, n))] == est
+
+
+def test_probe_against_index_signed_with_fewer_salts(spark):
+    """An index signed with fewer salts than the probe still answers:
+    the shared bands collide, and the salts the index lacks count as
+    mismatches (the padding rule of the element-wise comparison)."""
+    corpus = _docs(spark).filter(F.col("doc_id") == 1)
+    D.build_minhash_index_table(corpus, "dedup_index_t8", n_salts=8, buckets=4)
+    new = spark.createDataFrame([(10, BASE)], ["doc_id", "text"])
+    hits = D.dedup_against_index(spark, new, "dedup_index_t8", n_salts=16)
+    assert [(r.new_doc_id, r.corpus_doc_id, r.est_jaccard) for r in hits.collect()] == [
+        (10, 1, 0.5)
+    ]
 
 
 def test_incremental_probe_shuffles_only_the_new_batch(spark):

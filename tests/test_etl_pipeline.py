@@ -239,6 +239,30 @@ def test_etl_empty_rerun_clears_stale_partition_when_opted_in(spark, tmp_path):
     assert glob.glob(f"{lk.enriched_path}/context_date={today}") == []
 
 
+def test_etl_day_without_raw_partition_returns_zero_and_writes_nothing(
+    spark, tmp_path
+):
+    """A day with no raw partition, while other days have one, flattens
+    to zero rows: the ETL reports 0 and creates no partition for it,
+    before and after another day has been loaded, and leaves the loaded
+    day as it was."""
+    lk = TelegramLake(str(tmp_path), chat_id=CHAT_ID)
+    today = lk.today()
+    empty_day = today - dt.timedelta(days=1)
+    part = f"{lk.raw_path}/context_date={today}"
+    os.makedirs(part)
+    with open(os.path.join(part, "b.json"), "w") as f:
+        for u in UPDATES[:2]:
+            f.write(json.dumps(u) + "\n")
+
+    assert run_daily_etl(spark, lk, context_date=empty_day) == 0
+    assert run_daily_etl(spark, lk, context_date=today) == 2
+    assert run_daily_etl(spark, lk, context_date=empty_day) == 0
+    assert glob.glob(f"{lk.enriched_path}/context_date={empty_day}") == []
+    rows = lk.read_enriched(spark).groupBy("context_date").count().collect()
+    assert [(r.context_date, r["count"]) for r in rows] == [(today, 2)]
+
+
 def test_enriched_schema_evolution_reads_union_with_merge(spark, tmp_path):
     """The day the pipeline grows a column, earlier partitions lack the
     field; merge_schema=True returns the union schema with NULLs for

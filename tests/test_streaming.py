@@ -371,3 +371,47 @@ def test_push_source_five_stage_front_door(spark, tmp_path):
         (r.user_id, r.text) for r in enr.select("user_id", "text").collect()
     }
     assert got == {(1, "hello"), (1, "worlds!")}
+
+
+def test_file_sink_raw_zone_reads_only_committed_files(spark, tmp_path):
+    """Under the plain file-sink ingest route the raw root holds the
+    sink's ``_spark_metadata`` commit log, and ``read_raw`` lists only
+    the files committed there: a day laid down beside it stays
+    invisible, even when read by its own date."""
+    import datetime as dt
+
+    from data_pipeline_project_using_telegram_and_aws_spark.sources.lake import TelegramLake
+    from data_pipeline_project_using_telegram_and_aws_spark.streaming.ingest import (
+        start_ingest_stream,
+    )
+
+    def update(uid):
+        return {
+            "update_id": uid,
+            "message": {
+                "message_id": uid,
+                "from": {"id": 1, "is_bot": False, "first_name": "ada"},
+                "chat": {"id": -42, "type": "group"},
+                "date": 1704103200,
+                "text": f"m{uid}",
+            },
+        }
+
+    lake = TelegramLake(str(tmp_path / "lake"), chat_id=-42)
+    landing = str(tmp_path / "landing")
+    _write_batch(landing, "a.json", [update(1), update(2)])
+    q = start_ingest_stream(
+        spark, lake, landing, str(tmp_path / "ckpt"), available_now=True
+    )
+    q.awaitTermination(120)
+    assert not q.isActive
+    assert os.path.isdir(os.path.join(lake.raw_path, "_spark_metadata"))
+
+    laid = str(lake.today() - dt.timedelta(days=1))
+    _write_batch(
+        os.path.join(lake.raw_path, f"context_date={laid}"),
+        "laid.json",
+        [update(3)],
+    )
+    assert sorted(r.update_id for r in lake.read_raw(spark).collect()) == [1, 2]
+    assert lake.read_raw(spark, context_date=laid).count() == 0

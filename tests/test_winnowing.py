@@ -59,6 +59,24 @@ def test_shift_robustness_and_overlap_ranking(spark):
     assert pairs.get((0, 2), 0.0) < 0.2
 
 
+def test_overlap_self_join_winnows_once(spark, tmp_path):
+    """Both sides of the fingerprint self-join read one exchange of the
+    sized fingerprint rows, so the k-gram md5s and the winnowing window
+    run once: one fingerprint Window in the AQE-final plan, the second
+    side a ReusedExchange. A small Parquet input is the shape where the
+    planner broadcasts one side and, without the shared exchange,
+    recomputes its whole subtree under the broadcast."""
+    path = str(tmp_path / "docs")
+    _docs(spark).write.parquet(path)
+    docs = spark.read.parquet(path)
+    out = fingerprint_overlap(winnow_fingerprints(docs, K, W))
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    lines = plan.split("== Initial Plan ==")[0].splitlines()
+    assert sum("AS fingerprint#" in ln and "Window [" in ln for ln in lines) == 1, plan
+    assert any("ReusedExchange" in ln for ln in lines), plan
+
+
 def test_winnowing_guarantee_property():
     """Schleimer-Wilkerson-Aiken guarantee: documents sharing a substring
     of length >= k + window - 1 share at least one fingerprint. Checked

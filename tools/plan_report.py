@@ -1,12 +1,14 @@
 """Physical-plan audit across the whole query registry.
 
 For every registered query, build the DataFrame at the given sf_dir and
-tabulate five plan-hygiene metrics from the executed plan: exchanges
-(shuffles), broadcasts, parquet scans, Python-worker stages
-(ArrowEval/MapInPandas — should be ~0 outside the deliberate decode
-paths), and sorts. Whole-stage-codegen spans are NOT tabulated: AQE-
-wrapped plan strings do not surface the codegen markers. Writes a
-markdown table to stdout (or PLAN_AUDIT.md with --write) so plan
+tabulate six plan-hygiene metrics from the executed plan: exchanges
+(shuffles), reused exchanges (``ReusedExchange`` — a self-join whose
+sides share one exchange reads it once; a self-join that recomputes its
+input shows as ``scans 2 / reused 0``), broadcasts, parquet scans,
+Python-worker stages (ArrowEval/MapInPandas — should be ~0 outside the
+deliberate decode paths), and sorts. Whole-stage-codegen spans are NOT
+tabulated: AQE-wrapped plan strings do not surface the codegen markers.
+Writes a markdown table to stdout (or PLAN_AUDIT.md with --write) so plan
 regressions show up as diffs, not as bench-time surprises.
 
 Usage:
@@ -25,7 +27,8 @@ from data_pipeline_project_using_telegram_and_aws_spark.session import get_spark
 
 
 def audit(plan: str) -> dict[str, int]:
-    lines = plan.splitlines()
+    # a finished AQE plan prints its final plan, then the initial one
+    lines = plan.split("== Initial Plan ==")[0].splitlines()
     return {
         "exchanges": sum(
             1
@@ -34,6 +37,7 @@ def audit(plan: str) -> dict[str, int]:
             and "ReusedExchange" not in l
             and "BroadcastExchange" not in l
         ),
+        "reused": sum(1 for l in lines if "ReusedExchange" in l),
         "broadcasts": sum(1 for l in lines if "BroadcastExchange" in l),
         "scans": sum(1 for l in lines if "FileScan parquet" in l or "Scan parquet" in l),
         "python_stages": sum(
@@ -69,16 +73,18 @@ def main() -> None:
         try:
             df = fn(spark, sf_dir)
             # execute first: AQE only finalizes (and codegen-annotates)
-            # the plan at runtime — isFinalPlan=true is the plan that ran
-            df.write.format("noop").mode("overwrite").save()
+            # the plan at runtime — isFinalPlan=true is the plan that ran.
+            # Run df's OWN query execution: a writer action (the noop sink)
+            # plans a separate one and leaves df's plan at isFinalPlan=false.
+            df._jdf.queryExecution().toRdd().count()
             plan = df._jdf.queryExecution().executedPlan().toString()
             rows.append((name, audit(plan)))
         except Exception as e:  # noqa: BLE001
             rows.append((name, {"error": str(e)[:60]}))
 
-    cols = ["exchanges", "broadcasts", "scans", "python_stages", "sorts"]
+    cols = ["exchanges", "reused", "broadcasts", "scans", "python_stages", "sorts"]
     out = ["# Plan audit", "", f"sf_dir: `{sf_dir}` (executed AQE-final plans; "
-           "each query ran to completion through the noop sink first; "
+           "each query's own plan ran to completion first; "
            "ext_* rows are the extension-surface plans scale_lint builds)", "",
            "| query | " + " | ".join(cols) + " |",
            "|---|" + "---|" * len(cols)]
