@@ -34,15 +34,6 @@ from . import dedup as D
 
 LEDGER_COLS = ["doc_id", "stage", "reason", "kept_alive"]
 
-# Measurement knobs for the two pipeline checkpoints (r14 optimization
-# probes — tools/ A/B scripts toggle these in one session; production
-# callers never touch them). Each lazy localCheckpoint pays a full
-# Catalyst analyze+optimize+physical-plan pass AT CALL TIME (toRdd), so
-# checkpoint count is a driver-side plan-build dial, traded against
-# subtree re-execution in the final plan.
-_CKPT_RANKED = True
-_CKPT_NEAR = True
-
 
 def _tokens(col):
     return F.filter(F.split(col, " "), lambda t: t != "")
@@ -225,8 +216,7 @@ def curate_corpus(
     # re-runs the scan + hash + window (the 100 TB analog is staging the
     # ranked table to the lake between pipeline stages).
     ranked = hashed.withColumn("__rn", F.row_number().over(w))
-    if _CKPT_RANKED:
-        ranked = ranked.localCheckpoint(eager=False)
+    ranked = ranked.localCheckpoint(eager=False)
     null_flag = F.lit(None).cast("boolean").alias("kept_alive")
     ledgers.append(
         ranked.filter(F.col("__rn") > 1).select(
@@ -328,8 +318,7 @@ def curate_corpus(
     # small output runs it once per pass instead of once per consumer.
     # Inside it, each self-join's two sides share one exchange (the band
     # rows, or the sized fingerprints), so signatures are computed once.
-    if _CKPT_NEAR:
-        near_drops = near_drops.localCheckpoint(eager=False)
+    near_drops = near_drops.localCheckpoint(eager=False)
     ledgers.append(near_drops)
     survivors = survivors.join(
         near_drops.select(F.col("doc_id").alias(id_col)), id_col, "left_anti"

@@ -213,9 +213,8 @@ def write_webdataset_shards(
         from ..sources.commit import manifest
 
         if manifest(out_dir) is not None:
-            # the commit_dir rename-mode guard, applied here: an
-            # inplace export into a pointer-managed directory would
-            # write tars the resolving reader never sees
+            # an inplace export into a pointer-managed directory
+            # would write tars the resolving reader never sees
             raise ValueError(
                 "write_webdataset_shards: out_dir is migrated to "
                 "manifest commits — an inplace export would leave two "
@@ -271,7 +270,7 @@ def write_webdataset_shards(
             )
         holder["rows"] = sorted(rows, key=lambda r: r["shard"])
 
-    commit_dir(out_dir, write_fn, mode="manifest")
+    commit_dir(out_dir, write_fn)
     return df.sparkSession.createDataFrame(
         holder["rows"], SHARD_MANIFEST_DDL
     )

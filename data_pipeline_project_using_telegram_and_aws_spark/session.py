@@ -23,6 +23,18 @@ from pyspark.sql import SparkSession
 DEFAULT_APP_NAME = "data-pipeline-spark-engine"
 
 
+def local_cores(default: str = "*") -> str:
+    """The core count for a ``local[...]`` master: ``$SPARK_GRAFT_CPUS``
+    when it is a positive integer, else ``default`` — an empty, zero,
+    negative or non-numeric value would otherwise build a master such
+    as ``local[]`` or ``local[0]`` that fails to start."""
+    try:
+        n = int(os.environ.get("SPARK_GRAFT_CPUS", ""))
+    except ValueError:
+        return default
+    return str(n) if n > 0 else default
+
+
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     master: str | None = None,
@@ -32,9 +44,9 @@ def get_spark(
     """Build (or reuse) a SparkSession with the engine's tuning profile.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (falling back to
-    ``local[*]``) when no active session exists.
+    ``local[*]``, see :func:`local_cores`) when no active session exists.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    cpus = local_cores()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

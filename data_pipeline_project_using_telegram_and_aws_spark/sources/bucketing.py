@@ -157,7 +157,8 @@ def compact_bucketed_table(
     — the swap is metadata-only; the data rewrite is the price of
     restoring the layout, paid at compaction cadence, not query time.
 
-    Two swap protocols (``swap=``), mirroring `sources/commit.py`:
+    Two swap protocols (``swap=``; `sources/lake.py`'s
+    filesystem-atomicity note says why both remain):
 
     - ``"rename"`` (default): two catalog renames. NOT atomic — between
       the renames the original name does not resolve, so run it in a
@@ -181,7 +182,12 @@ def compact_bucketed_table(
       the one every swap shares: an in-flight lazy scan that resolved
       the OLD location keeps reading a directory the sweep is
       deleting — schedule compaction off the read path or delay the
-      sweep by one cadence."""
+      sweep by one cadence. Refuses a PARTITIONED table with
+      ``ValueError`` before writing anything: ``SET LOCATION`` moves
+      only the table root while the catalog keeps listing the old
+      partitions, so every query would silently come back empty. Use
+      ``"rename"`` there (it rewrites the partition column as a plain
+      column)."""
     if swap == "location":
         _compact_swap_location(spark, table)
         return
@@ -224,6 +230,16 @@ def _compact_swap_location(spark: SparkSession, table: str) -> None:
     scratch entry (external: data stays) → sweep superseded dirs."""
     import re
 
+    parts = [
+        c.name for c in spark.catalog.listColumns(table) if c.isPartition
+    ]
+    if parts:
+        raise ValueError(
+            f"compact_bucketed_table: swap='location' cannot compact "
+            f"{table}, which is partitioned by {parts} - SET LOCATION "
+            "moves only the table root, not its catalog partitions. "
+            "Use swap='rename'."
+        )
     n, cols, sorts = bucket_spec(spark, table)
     desc = {
         r["col_name"]: r["data_type"]

@@ -14,36 +14,39 @@ Improvements over the reference, deliberate (SURVEY §2.9 ST4): writes to
 the enriched zone use *dynamic partition overwrite*, so re-running a day is
 idempotent (the reference would duplicate output).
 
-Filesystem-atomicity note, stated ONCE for every temp-and-swap path in
-this repo (`streaming/ivm.py` view swaps, `streaming/upsert.py`'s
-empty-table marker replacement, `sources/bucketing.py` compactions):
-their crash-consistency arguments rely on directory ``rename`` being
-atomic — true on POSIX filesystems and HDFS, FALSE on object stores,
-where rename is a non-atomic per-object copy-then-delete. The
-object-store deployment path is a MANIFEST POINTER instead: write the
-new data under a unique directory, then atomically update a small
-manifest file or catalog entry naming the current directory (the
-Iceberg/Delta commit model); readers resolve the pointer, never the
-directory name. Each swap site cites this note. This path is
-IMPLEMENTED, not just documented, twice over:
-``streaming/ledger_compaction.commit_baseline(mode="manifest")``
-commits ledger baselines via a versioned directory + one atomic
-single-file replace (a single-key PUT on a real object store), with
-the same crash-injection suite green as the rename path
-(`tests/test_ledger_compaction.py`); and the generic
-`sources/commit.commit_dir` gives every plain-directory swap the same
-two modes — `streaming/ivm.py` view commits adopt it
-(``commit_mode="manifest"``, crash-injected in `tests/test_ivm.py`),
-and the keyed upsert table applies it at BUCKET granularity
-(`streaming/upsert.py` ``commit_mode="manifest"``: per-bucket
-version-dir + pointer swap, lazy one-way migration from rename-era
-tables, crash-injected incl. mid-batch partial commits + replay
-convergence in `tests/test_upsert_manifest.py`). Round-10
-closure: `sources/bucketing.py` compactions gained
-``swap="location"`` — the catalog itself as the pointer store (ONE
-atomic ``ALTER TABLE ... SET LOCATION`` onto a fresh version dir, no
-reader window, crash-injected in `tests/test_bucketing.py`) — so
-every swap site in the engine now has an object-store-safe protocol.
+Filesystem-atomicity note, stated ONCE for every directory swap in
+this repo. The reference's lake lives on S3, where a directory
+``rename`` is a non-atomic per-object copy-then-delete — so no swap
+here relies on one. Every swap site uses ONE protocol, the manifest
+pointer: write the new content under a fresh version directory nothing
+points at, then atomically replace a small pointer naming it (the
+Iceberg/Delta commit model: a single-key PUT on S3/GCS, ``os.replace``
+locally); readers resolve the pointer, never the directory name, and a
+crash leaves either the old pointer or the new one. The sites:
+`sources/commit.commit_dir`, the generic version (`streaming/ivm.py`
+view commits, `streaming/upsert.py` per-bucket merges,
+`operators/webdataset.py`'s ``commit="manifest"`` export), and
+`streaming/ledger_compaction.commit_baseline`, which adds the folding
+horizon ledgers need. Each is crash-injected in its tests. Partition
+writes that go through Spark's own file committer (dynamic partition
+overwrite of enriched days, ledger and changefeed batches, the shard
+rewrite in `operators/packing.py`) are not swaps of this kind: on an
+object store they need an object-store committer such as the S3A
+magic committer, a deployment setting rather than engine code.
+
+`sources/bucketing.compact_bucketed_table` is the one place where the
+pointer store is the CATALOG, and it keeps two swaps.
+``swap="location"`` is the pointer model: one atomic ``ALTER TABLE ...
+SET LOCATION`` onto a fresh version directory, no reader window.
+``swap="rename"`` (the default) is two catalog renames with a
+TABLE_NOT_FOUND window between them, and on a managed table each
+rename moves the warehouse directory — not atomic on an object store.
+Both remain because ``SET LOCATION`` moves only the table root: a
+PARTITIONED table (the IVF index tables of
+`streaming/index_maintenance.py` are partitioned by ``ingest_batch``)
+keeps its catalog partition entries, so the location swap refuses it,
+and the rename swap, which rewrites the partition column as a plain
+column, is the only one that runs there.
 """
 
 from __future__ import annotations

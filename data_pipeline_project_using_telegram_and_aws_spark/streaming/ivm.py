@@ -27,10 +27,10 @@ Consistency contract: the view carries a CURSOR (the highest
 readers ignore). ``refresh_grouped_view`` applies only feed partitions
 above the cursor, so refreshing twice is a no-op and a crash between
 write and cursor-advance re-applies one batch onto the PRE-apply view
-(the write is atomic: view + cursor land together via a temp-and-swap
-on the view directory). Groups whose count reaches zero leave the
-view. Equality with a from-scratch recompute after any batch sequence
-is the pinned invariant.
+(the write is atomic: view + cursor land together behind one pointer
+swap of the view directory, `sources/commit.py`). Groups whose count
+reaches zero leave the view. Equality with a from-scratch recompute
+after any batch sequence is the pinned invariant.
 
 Scale shape: deltas are |changefeed-slice|-sized; the view is
 group-sized; the merge is one full-outer join between them. The base
@@ -85,9 +85,8 @@ def changefeed_deltas(
 
 
 def read_view(spark: SparkSession, view_path: str) -> DataFrame:
-    """Current view rows: (group..., n_rows, sum_<c>...). Resolves the
-    manifest pointer when the view was committed with
-    ``commit_mode="manifest"`` (`sources/commit.py`)."""
+    """Current view rows: (group..., n_rows, sum_<c>...), read through
+    the view's commit pointer (`sources/commit.py`)."""
     return spark.read.parquet(resolve_dir(view_path))
 
 
@@ -107,17 +106,11 @@ def _swap_view(
     view_path: str,
     rows: DataFrame,
     new_cursor: int,
-    commit_mode: str = "rename",
 ) -> None:
     """Land view rows + cursor together via `sources/commit.commit_dir`:
-    ``commit_mode="rename"`` is the historical temp-and-swap (atomic on
-    POSIX/HDFS, not on object stores — `sources/lake.py`'s note, shared
-    with `streaming/upsert.py`'s all-tombstone marker and
-    `sources/bucketing.py`'s compactions); ``commit_mode="manifest"``
-    is the object-store-safe versioned-dir + atomic pointer-replace
-    commit, under which readers (:func:`read_view`, the cursor read)
-    resolve the pointer and a crash at ANY step leaves the previous
-    view fully readable."""
+    a fresh versioned dir, then one atomic pointer replace. Readers
+    (:func:`read_view`, the cursor read) resolve the pointer, so a
+    crash at ANY step leaves the previous view fully readable."""
     rows = rows.localCheckpoint(eager=True)  # cut lineage: we overwrite
     cursor_df = spark.createDataFrame(
         [(new_cursor,)], "last_batch long"
@@ -131,7 +124,7 @@ def _swap_view(
             str(Path(target) / "_cursor")
         )
 
-    commit_dir(view_path, write, mode=commit_mode)
+    commit_dir(view_path, write)
 
 
 def refresh_grouped_view(
@@ -141,7 +134,6 @@ def refresh_grouped_view(
     group_cols: list[str],
     sum_cols: list[str],
     value_schema: str,
-    commit_mode: str = "rename",
 ) -> int:
     """Apply every changefeed partition above the view's cursor;
     returns the number of batches applied. Idempotent: a second call
@@ -199,9 +191,8 @@ def refresh_grouped_view(
         )
         .filter(F.col("n_rows") > 0)
     )
-    # temp-and-swap: view rows + cursor land together or not at all
-    # (atomicity caveat: see _swap_view's POSIX note)
-    _swap_view(spark, view_path, merged, new_cursor, commit_mode)
+    # view rows + cursor land together or not at all
+    _swap_view(spark, view_path, merged, new_cursor)
     return n_batches
 
 
@@ -213,7 +204,6 @@ def refresh_distinct_view(
     key_col: str,
     value_schema: str,
     lg_k: int = 12,
-    commit_mode: str = "rename",
 ) -> int:
     """Sketch-backed distinct-count IVM: maintain per-group HLL rows
     (sketch, n_rows, distinct_est) from the changefeed's ADDED side —
@@ -314,7 +304,7 @@ def refresh_distinct_view(
         )
         .withColumn("distinct_est", F.hll_sketch_estimate("sketch"))
     )
-    _swap_view(spark, view_path, merged, new_cursor, commit_mode)
+    _swap_view(spark, view_path, merged, new_cursor)
     return n_batches
 
 
@@ -326,7 +316,6 @@ def rebuild_distinct_view(
     group_cols: list[str],
     key_col: str,
     lg_k: int = 12,
-    commit_mode: str = "rename",
 ) -> int:
     """The recompute path :func:`refresh_distinct_view`'s rejection
     names, as one public call: rebuild the per-group HLL view from the
@@ -337,7 +326,7 @@ def rebuild_distinct_view(
     everything the rebuild already saw. Returns the stamped cursor.
 
     Use after any removal/change-bearing slice wedged the incremental
-    path; the swap is the same atomic temp-and-swap every view write
+    path; the swap is the same atomic pointer swap every view write
     uses, so a crashed rebuild leaves the old view intact. After a
     rebuild, ``n_rows`` restarts as the CURRENT table's row count per
     group (the rows-observed ledger forgets pre-rebuild deliveries)."""
@@ -353,5 +342,5 @@ def rebuild_distinct_view(
     view = hll_ledger(
         read_current(spark, table_path), key_col, by=group_cols, lg_k=lg_k
     )
-    _swap_view(spark, view_path, view, new_cursor, commit_mode)
+    _swap_view(spark, view_path, view, new_cursor)
     return new_cursor

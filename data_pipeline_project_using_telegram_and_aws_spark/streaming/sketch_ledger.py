@@ -132,13 +132,12 @@ def compact_ledger(
     ledger_path: str,
     through_batch: int,
     by: list[str] | None = None,
-    commit_mode: str = "rename",
 ) -> None:
     """Fold every ledger row with ``ingest_batch <= through_batch``
-    into ONE baseline row per group (stored as ``ingest_batch = -1``),
-    leaving newer batch partitions untouched — the ledger's lifecycle
-    op for high-cardinality groups (per-user/per-domain ledgers where
-    batches × groups eventually dwarfs groups).
+    into ONE baseline row per group (read back as ``ingest_batch =
+    -1``), leaving newer batch partitions untouched — the ledger's
+    lifecycle op for high-cardinality groups (per-user/per-domain
+    ledgers where batches × groups eventually dwarfs groups).
 
     Union idempotence makes the ESTIMATE insensitive to when this runs,
     but the replay contract changes exactly the way
@@ -149,8 +148,8 @@ def compact_ledger(
     window — stream stopped, checkpoint committed past
     ``through_batch`` — and the contract stays exact.
 
-    Crash consistency: commits via `ledger_compaction` (staged
-    baseline + marker, one atomic swap, delete last), so a crash at
+    Crash consistency: commits via `ledger_compaction` (versioned
+    baseline, one atomic pointer replace, delete last), so a crash at
     ANY step leaves `ledger_distinct_so_far` reading the exact
     pre- or post-compaction answer — never a double-counted one."""
     sweep_stragglers(ledger_path)
@@ -163,5 +162,5 @@ def compact_ledger(
         return
     old = ledger.filter(F.col("ingest_batch") <= through_batch)
     baseline = merge_hll_ledger(old.drop("ingest_batch"), by=by)
-    commit_baseline(baseline, ledger_path, through_batch, mode=commit_mode)
+    commit_baseline(baseline, ledger_path, through_batch)
     delete_folded(ledger_path, through_batch)

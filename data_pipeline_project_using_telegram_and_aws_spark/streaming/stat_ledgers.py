@@ -302,11 +302,11 @@ def compact_stat_ledger(
     kind: str,
     by: list[str] | None = None,
     k: int = 1024,
-    commit_mode: str = "rename",
 ) -> None:
     """Fold every ledger partition with ``ingest_batch <=
-    through_batch`` into ONE baseline row set under ``ingest_batch =
-    -1`` — `sketch_ledger.compact_ledger` for these ledgers.
+    through_batch`` into ONE baseline row set (read back as
+    ``ingest_batch = -1``) — `sketch_ledger.compact_ledger` for these
+    ledgers.
     ``kind``: ``"quantile"`` (bottom-k sample union — estimate
     provably unchanged), ``"cms"`` (counter sums), or ``"ngram"``
     (hashed-n-gram profile sums — exact, fold changes no read). The
@@ -316,11 +316,11 @@ def compact_stat_ledger(
     double-count its counters — compact only with the stream stopped
     and the checkpoint committed past ``through_batch``.
 
-    Crash consistency: commits via `ledger_compaction` (staged
-    baseline + ``_compacted_through`` marker, one atomic directory
-    swap, partition deletion LAST), and every read side here goes
-    through `ledger_compaction.read_ledger`, which excludes
-    already-folded partitions ≤ the committed marker. For cms this is
+    Crash consistency: commits via `ledger_compaction` (versioned
+    baseline + horizon behind one atomic pointer replace, partition
+    deletion LAST), and every read side here goes through
+    `ledger_compaction.read_ledger`, which excludes already-folded
+    partitions ≤ the committed horizon. For cms this is
     load-bearing correctness: the previous write-then-delete sequence
     had a crash window where the folded counters lived in BOTH the
     baseline and their surviving partitions and every later merge
@@ -348,7 +348,7 @@ def compact_stat_ledger(
         baseline = merge_ngram_profiles(old)
     else:
         baseline = merge_cms_ledger(old, by=by)
-    commit_baseline(baseline, ledger_path, through_batch, mode=commit_mode)
+    commit_baseline(baseline, ledger_path, through_batch)
     delete_folded(ledger_path, through_batch)
 
 
@@ -566,12 +566,11 @@ def compact_candidates(
     spark: SparkSession,
     candidates_path: str,
     through_batch: int,
-    commit_mode: str = "rename",
 ) -> None:
     """Fold old candidate partitions into one deduplicated baseline
-    (``ingest_batch = -1``). The candidate union only matters as a
-    SET (the CMS supplies the counts), so compaction is a distinct —
-    idempotent, order-insensitive, answer-preserving — and the
+    (read back as ``ingest_batch = -1``). The candidate union only
+    matters as a SET (the CMS supplies the counts), so compaction is a
+    distinct — idempotent, order-insensitive, answer-preserving — and the
     candidate store stays bounded by distinct-ever-candidates instead
     of growing per batch. Same maintenance-window contract as the
     ledgers it rides with (a folded batch id replayed would re-land
@@ -594,7 +593,5 @@ def compact_candidates(
         .groupBy("item")
         .agg(F.max("batch_count").alias("batch_count"))
     )
-    commit_baseline(
-        baseline, candidates_path, through_batch, mode=commit_mode
-    )
+    commit_baseline(baseline, candidates_path, through_batch)
     delete_folded(candidates_path, through_batch)

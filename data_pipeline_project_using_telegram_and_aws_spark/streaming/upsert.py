@@ -1,30 +1,42 @@
 """Streaming keyed upserts into plain parquet — MERGE semantics
-without a lakehouse table format, built from the partition-overwrite
-primitive this repo's other maintainers
-(`index_maintenance`, `sketch_ledger`) already rely on.
+without a lakehouse table format.
 
-The trick that makes it scale: the target table is partitioned by
-``bucket = pmod(xxhash64(key), n_buckets)``. A micro-batch touches only
-the buckets its keys hash into, so the merge reads + rewrites
-``|affected buckets| / n_buckets`` of the table, not all of it —
-at 100 TB with 10⁴ buckets, a batch touching 50 keys rewrites ~50
-bucket partitions (file-sized), never the table. Inside each affected
-bucket, keep-latest (`operators/snapshots.latest_snapshot`) merges the
-existing rows with the batch; dynamic partition overwrite lands the
-result atomically per bucket.
+The trick that makes it scale: the target table is split into bucket
+directories by ``bucket = pmod(xxhash64(key), n_buckets)``. A
+micro-batch touches only the buckets its keys hash into, so the merge
+reads + rewrites ``|affected buckets| / n_buckets`` of the table, not
+all of it — at 100 TB with 10⁴ buckets, a batch touching 50 keys
+rewrites ~50 bucket directories (file-sized), never the table. Inside
+each affected bucket, keep-latest (`operators/snapshots.latest_snapshot`)
+merges the existing rows with the batch.
+
+Commit protocol: every bucket directory ``__bucket=N`` holds a
+one-line ``_dir_manifest`` pointing at a ``.v{n}`` version dir — the
+`sources/commit.py` pointer swap applied at BUCKET granularity (the
+reference's storage is S3, where a directory rename is a non-atomic
+copy-then-delete; `sources/lake.py`'s note). Bucket files carry plain
+data columns: ``__bucket`` is never stored, it is recomputed from
+``pmod(xxhash64(keys), n_buckets)`` wherever needed. A merge that
+empties a bucket commits a zero-row version, so the empty table stays
+readable with its schema. Atomicity is PER BUCKET: a crash mid-batch
+can leave some affected buckets committed and others not — each
+internally consistent — and the checkpoint's replay of the same batch
+re-merges idempotently and re-commits every affected bucket (pinned
+by the crash suite). Cross-bucket atomicity needs a table-level
+pointer (an Iceberg-style manifest of manifests) — out of scope,
+stated.
 
 Replay contract: re-delivering a batch re-runs a merge whose winner
 rule (highest ``seq_col``, deterministic tie-break) is IDEMPOTENT —
-the same rows win again and the rewrite is a byte-identical no-op.
+the same rows win again and the rewrite is a content-identical no-op.
 That is a STRONGER replay story than the ledger/index appends (which
 need the batch-id partition trick): upserts are naturally convergent.
 
 Constraints, stated loudly:
 
 - one upsert stream per target (concurrent writers to the same bucket
-  race on read-merge-write; Spark's committers don't serialize
-  cross-job writes to one partition) — fan-in belongs upstream, in the
-  stream union;
+  race on read-merge-write; nothing serializes cross-job commits to
+  one bucket) — fan-in belongs upstream, in the stream union;
 - tombstones are applied, not retained: a delete removes the key from
   the stored bucket rather than storing a marker. Convergence then
   relies on the checkpoint's in-order batch replay (a crashed batch
@@ -32,31 +44,6 @@ Constraints, stated loudly:
   guarantees per query. Feeding the same target from ad-hoc batch jobs
   out of order voids the delete semantics — that path needs retained
   tombstones with a TTL, the documented extension.
-
-Commit modes (``commit_mode=``), mirroring `sources/commit.py`:
-
-- ``"rename"`` (default, the original layout): buckets are Spark
-  partition directories (``__bucket=N``) landed by dynamic partition
-  overwrite — crash-consistent only where directory rename is atomic
-  (POSIX/HDFS, not object stores; `sources/lake.py`'s note).
-- ``"manifest"``: every bucket directory holds a one-line
-  ``_dir_manifest`` pointing at a ``.v{n}`` version dir (the
-  `sources/commit.py` pointer protocol applied at BUCKET granularity
-  — the reference's storage is S3, where this is the difference
-  between a safe merge and a torn one). Bucket files carry plain data
-  columns — ``__bucket`` is never stored, it is recomputed from
-  ``pmod(xxhash64(keys), n_buckets)`` wherever needed — so rename-era
-  buckets migrate LAZILY: the first manifest merge of a bucket folds
-  it (the commit sweep retires the old root-level files), untouched
-  buckets keep reading through ``resolve_dir``'s rename fallback.
-  Migration is one-way (a rename-mode merge on a migrated table
-  raises). Atomicity is PER BUCKET: a crash mid-batch can leave some
-  affected buckets committed and others not — each internally
-  consistent — and the checkpoint's replay of the same batch
-  re-merges idempotently and re-commits every affected bucket
-  (pinned by the crash suite). Cross-bucket atomicity needs a
-  table-level pointer (an Iceberg-style manifest of manifests) —
-  out of scope, stated.
 """
 
 from __future__ import annotations
@@ -67,9 +54,16 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from ..operators.snapshots import latest_snapshot
 from ..sources import commit as _commit
+
+
+def _bucket_of(keys: list[str], n_buckets: int):
+    return F.pmod(
+        F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)
+    ).cast("long")
 
 
 def upsert_batch(
@@ -81,12 +75,11 @@ def upsert_batch(
     delete_col: str | None = None,
     changefeed_path: str | None = None,
     batch_id: int = 0,
-    commit_mode: str = "rename",
 ) -> None:
-    """Merge one batch of keyed updates into the bucket-partitioned
-    target. Creates the table on first write. ``commit_mode``
-    chooses the bucket commit protocol (module docstring):
-    ``"manifest"`` is the object-store-safe per-bucket pointer swap.
+    """Merge one batch of keyed updates into the bucketed target:
+    read the affected buckets through their pointers, merge, then land
+    each affected bucket with `sources/commit.commit_dir`'s pointer
+    swap. Creates the table on first write.
 
     ``changefeed_path``: additionally emit this batch's EFFECT as CDC
     rows — `operators/snapshots.snapshot_diff` of the affected buckets
@@ -97,94 +90,37 @@ def upsert_batch(
     instead of diffing snapshots themselves; the diff operand is
     bucket-scoped, exactly the data the merge already read."""
     spark = batch.sparkSession
-    bucket = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets))
-    staged = batch.withColumn("__bucket", bucket.cast("long"))
-    migrated = _table_commit_mode(table_path) == "manifest"
-    if commit_mode == "manifest":
-        _upsert_batch_manifest(
-            staged, table_path, keys, seq_col, n_buckets, delete_col,
-            changefeed_path, batch_id,
-        )
-        return
-    if commit_mode != "rename":
-        raise ValueError(
-            f"upsert_batch: commit_mode must be rename | manifest, "
-            f"got {commit_mode!r}"
-        )
-    if migrated:
-        raise ValueError(
-            "upsert_batch: this table is migrated to per-bucket "
-            "manifest commits - a rename-mode merge would leave two "
-            "competing truths. Pass commit_mode='manifest'."
-        )
-
-    # An existing table with zero __bucket= dirs is the EMPTY state
-    # (every key tombstoned by a prior batch; a zero-row marker file
-    # holds the schema so readers keep working). The next merge starts
-    # from scratch: clear the marker and take the bootstrap path — but
-    # carry the marker's SCHEMA over: a column once introduced exists
-    # for every later row (the pinned evolution contract), even when
-    # the batch that introduced it was all-tombstones and nothing but
-    # the marker ever recorded it.
-    marker_fields = []
-    if os.path.exists(table_path) and not any(
-        Path(table_path).glob("__bucket=*")
-    ):
-        try:
-            marker_fields = list(
-                spark.read.parquet(table_path).schema.fields
-            )
-        except Exception:
-            # a crash between bucket cleanup and marker write can leave
-            # an unreadable husk; recover as before (schema already
-            # lost at crash time, not here)
-            marker_fields = []
-        shutil.rmtree(table_path)
-
-    if not os.path.exists(table_path):
-        out = latest_snapshot(staged, keys, seq_col, delete_col)
-        out = _union_marker_fields(out, marker_fields)
-        out = out.localCheckpoint(eager=True)
-        if out.isEmpty():
-            # all-tombstone first batch: land the schema marker, not a
-            # fileless directory that breaks every subsequent read
-            _write_empty_marker(out, table_path)
-        else:
-            (
-                out.repartition("__bucket")
-                .sortWithinPartitions(*keys)
-                .write.mode("overwrite")
-                .partitionBy("__bucket")
-                .parquet(table_path)
-            )
-        _write_schema_marker(spark, out.schema, table_path)
-        if changefeed_path is not None:
-            _emit_changefeed(
-                spark.createDataFrame([], out.drop("__bucket").schema),
-                out.drop("__bucket"),
-                keys,
-                changefeed_path,
-                batch_id,
-            )
-        return
+    staged = batch.withColumn("__bucket", _bucket_of(keys, n_buckets))
+    root = Path(table_path)
     affected = [
         r["__bucket"]
         for r in staged.select("__bucket").distinct().collect()
     ]
-    # mergeSchema: buckets rewritten after a schema evolution carry the
-    # new columns while untouched buckets don't — the union schema is
-    # the table's real schema (default parquet reads take one file's)
-    existing = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(table_path)
-        .filter(F.col("__bucket").isin(affected))
-    )
+    paths = _bucket_paths(table_path, affected)
+    if paths:
+        # mergeSchema: buckets rewritten after a schema evolution carry
+        # the new columns while untouched buckets don't — the union
+        # schema is the table's real schema
+        existing = (
+            spark.read.option("mergeSchema", "true").parquet(*paths)
+        )
+    else:
+        existing = spark.createDataFrame(
+            [], staged.drop("__bucket", *(
+                [delete_col] if delete_col and delete_col in
+                staged.columns else []
+            )).schema,
+        )
     # union in the durable schema marker: columns no surviving FILE
-    # carries (evolved-in by an all-tombstone batch) still exist —
-    # and flow into merged, keeping the marker's record monotone
+    # carries (evolved-in by an all-tombstone batch) still exist — and
+    # flow into merged, keeping the marker's record monotone
     existing = _union_marker_fields(
-        existing, _schema_marker_fields(spark, table_path)
+        existing, _schema_marker_fields(spark, table_path),
+        exclude=("__bucket",),
     )
+    # recompute the bucket from the keys — same hash, same types as
+    # the writer used (types can't change: evolution is add-only)
+    existing = existing.withColumn("__bucket", _bucket_of(keys, n_buckets))
     if delete_col is not None and delete_col not in existing.columns:
         # stored rows are post-tombstone survivors: not deleted
         existing = existing.withColumn(delete_col, F.lit(False))
@@ -213,163 +149,12 @@ def upsert_batch(
         keys,
         seq_col,
         delete_col,
-    ).localCheckpoint(eager=True)  # cut lineage: we overwrite our input
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # sorted-by-key bucket files: parquet min/max stats prune row
-    # groups inside a bucket, so `lookup` reads even less than 1/n
-    (
-        merged.repartition("__bucket")
-        .sortWithinPartitions(*keys)
-        .write.mode("overwrite")
-        .partitionBy("__bucket")
-        .parquet(table_path)
-    )
-    # dynamic overwrite only rewrites partitions PRESENT in the output:
-    # an affected bucket whose merge came back empty (its last keys were
-    # all tombstoned) must be deleted explicitly or stale rows survive
-    surviving = {
-        r["__bucket"]
-        for r in merged.select("__bucket").distinct().collect()
-    }
-    for b in set(affected) - surviving:
-        d = Path(table_path) / f"__bucket={b}"
-        if d.exists():
-            shutil.rmtree(d)
-    if not any(Path(table_path).glob("__bucket=*")):
-        # the batch tombstoned the table's LAST keys: the dynamic
-        # overwrite wrote nothing and the cleanup removed every bucket
-        # dir — replace the fileless husk with the zero-row schema
-        # marker so read_current/lookup and the next merge still work
-        # (rename-atomicity caveat: sources/lake.py filesystem note)
-        shutil.rmtree(table_path)
-        _write_empty_marker(merged, table_path)
-    _write_schema_marker(spark, merged.schema, table_path)
-    if changefeed_path is not None:
-        _emit_changefeed(
-            before, merged.drop("__bucket"), keys, changefeed_path,
-            batch_id,
-        )
-
-
-def _table_commit_mode(table_path: str) -> str:
-    """"manifest" once ANY bucket carries a committed pointer (the
-    one-way migration marker), else "rename". A table with NO buckets
-    is ambiguous; the tiebreaker is the empty-state layout — rename
-    mode's empty state is a root-level zero-row parquet marker,
-    manifest mode's is ``_schema`` alone (manifest tables never store
-    root-level data)."""
-    root = Path(table_path)
-    if not root.exists():
-        return "rename"
-    buckets = list(root.glob("__bucket=*"))
-    for bd in buckets:
-        if (bd / _commit.MANIFEST_FILE).exists():
-            return "manifest"
-    if buckets:
-        return "rename"
-    if any(root.glob("*.parquet")):
-        return "rename"  # the rename-era empty-marker husk
-    if (root / "_schema").exists():
-        return "manifest"
-    return "rename"
-
-
-def _manifest_bucket_paths(table_path: str, buckets=None) -> list[str]:
-    """Resolved data directories of the given buckets (all when None),
-    skipping crash husks (a bucket dir with neither a committed
-    pointer nor rename-era root files — a run died before its first
-    commit point; the next commit's sweep reclaims it)."""
-    root = Path(table_path)
-    out = []
-    if not root.exists():
-        return out
-    dirs = (
-        [root / f"__bucket={b}" for b in buckets]
-        if buckets is not None
-        else sorted(root.glob("__bucket=*"))
-    )
-    for bd in dirs:
-        if not bd.exists():
-            continue
-        if _commit.manifest(str(bd)) is not None:
-            out.append(_commit.resolve_dir(str(bd)))
-        elif any(bd.glob("*.parquet")):
-            out.append(str(bd))  # rename-era bucket, not yet migrated
-    return out
-
-
-def _upsert_batch_manifest(
-    staged: DataFrame,
-    table_path: str,
-    keys: list[str],
-    seq_col: str,
-    n_buckets: int,
-    delete_col: str | None,
-    changefeed_path: str | None,
-    batch_id: int,
-) -> None:
-    """The manifest-mode merge: read affected buckets through their
-    pointers, align + merge exactly like the rename path, then land
-    each affected bucket with `sources/commit.commit_dir`'s pointer
-    swap. ``__bucket`` is never stored in the files (recomputed from
-    the key hash), which is what lets rename-era buckets migrate
-    lazily and readers stay layout-agnostic."""
-    spark = staged.sparkSession
-    root = Path(table_path)
-    affected = [
-        r["__bucket"]
-        for r in staged.select("__bucket").distinct().collect()
-    ]
-    marker_fields = _schema_marker_fields(spark, table_path)
-    paths = _manifest_bucket_paths(table_path, affected)
-    if paths:
-        existing = (
-            spark.read.option("mergeSchema", "true").parquet(*paths)
-        )
-    else:
-        existing = spark.createDataFrame(
-            [], staged.drop("__bucket", *(
-                [delete_col] if delete_col and delete_col in
-                staged.columns else []
-            )).schema,
-        )
-    existing = _union_marker_fields(
-        existing, marker_fields, exclude=("__bucket",)
-    )
-    # recompute the bucket from the keys — same hash, same types as
-    # the writer used (types can't change: evolution is add-only)
-    existing = existing.withColumn(
-        "__bucket",
-        F.pmod(
-            F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)
-        ).cast("long"),
-    )
-    if delete_col is not None and delete_col not in existing.columns:
-        existing = existing.withColumn(delete_col, F.lit(False))
-    # add-only schema alignment (the rename path's contract, verbatim)
-    for c in staged.columns:
-        if c not in existing.columns:
-            existing = existing.withColumn(
-                c, F.lit(None).cast(staged.schema[c].dataType)
-            )
-    for c in existing.columns:
-        if c not in staged.columns:
-            staged = staged.withColumn(
-                c, F.lit(None).cast(existing.schema[c].dataType)
-            )
-    before = existing.drop("__bucket")
-    if delete_col is not None:
-        before = before.drop(delete_col)
-    before = before.localCheckpoint(eager=True)
-    merged = latest_snapshot(
-        existing.unionByName(staged.select(*existing.columns)),
-        keys,
-        seq_col,
-        delete_col,
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)  # cut lineage: we replace our input
     # ONE Spark job stages every affected bucket's new content; the
     # per-bucket pointer swaps then move staged dirs (driver-side
-    # renames into fresh version dirs — pre-commit, torn-safe)
+    # renames into fresh version dirs — pre-commit, torn-safe).
+    # Sorted-by-key bucket files: parquet min/max stats prune row
+    # groups inside a bucket, so `lookup` reads even less than 1/n.
     stage = root / ".stage"
     if stage.exists():
         shutil.rmtree(stage)  # a dead run's leftovers
@@ -393,7 +178,6 @@ def _upsert_batch_manifest(
             continue  # tombstones for keys never stored: no dir to empty
         else:
             # the merge emptied this bucket: commit a zero-row version
-            # (readers see an empty bucket — no rmtree husk dance)
             def write_fn(target):
                 (
                     spark.createDataFrame([], empty_schema)
@@ -402,7 +186,7 @@ def _upsert_batch_manifest(
                     .parquet(target)
                 )
 
-        _commit.commit_dir(bd, write_fn, mode="manifest")
+        _commit.commit_dir(bd, write_fn)
     if stage.exists():
         shutil.rmtree(stage)
     _write_schema_marker(spark, merged.schema, table_path)
@@ -411,6 +195,24 @@ def _upsert_batch_manifest(
             before, merged.drop("__bucket"), keys, changefeed_path,
             batch_id,
         )
+
+
+def _bucket_paths(table_path: str, buckets=None) -> list[str]:
+    """Resolved data directories of the given buckets (all when None),
+    skipping crash husks (a bucket dir with no committed pointer — a
+    run died before its first commit point; the next commit's sweep
+    reclaims it)."""
+    root = Path(table_path)
+    dirs = (
+        [root / f"__bucket={b}" for b in buckets]
+        if buckets is not None
+        else sorted(root.glob("__bucket=*"))
+    )
+    return [
+        _commit.resolve_dir(str(bd))
+        for bd in dirs
+        if _commit.manifest(str(bd)) is not None
+    ]
 
 
 def _write_schema_marker(
@@ -427,10 +229,10 @@ def _write_schema_marker(
     later row. Writers refresh it after every merge from the merged
     union schema (which itself unions the previous marker, so the
     record never narrows); readers union its fields in as NULL columns.
-    Crash caveat (same class as the POSIX note in sources/lake.py): a
-    crash between the data write and this refresh loses only columns
-    carried by NO file — columns in any surviving file re-enter the
-    marker at the next merge via the mergeSchema read."""
+    Crash caveat: the marker is not part of any bucket's pointer
+    swap, so a crash between the bucket commits and this refresh loses
+    only columns carried by NO file — columns in any surviving file
+    re-enter the marker at the next merge via the mergeSchema read."""
     (
         spark.createDataFrame([], schema)
         .coalesce(1)
@@ -457,20 +259,6 @@ def _union_marker_fields(
         if f.name not in df.columns and f.name not in exclude:
             df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
     return df
-
-
-def _write_empty_marker(template: DataFrame, table_path: str) -> None:
-    """Persist a zero-row, NON-partitioned parquet carrying the table
-    schema (``__bucket`` as a plain long column). Readers infer the
-    schema from it; `upsert_batch` recognizes the no-bucket-dirs layout
-    as the empty state and bootstraps over it on the next write."""
-    spark = template.sparkSession
-    (
-        spark.createDataFrame([], template.schema)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(table_path)
-    )
 
 
 def _emit_changefeed(
@@ -506,7 +294,6 @@ def start_upsert_stream(
     delete_col: str | None = None,
     available_now: bool = True,
     changefeed_path: str | None = None,
-    commit_mode: str = "rename",
 ) -> StreamingQuery:
     """File-source stream of keyed updates → bucket-local merges (and,
     with ``changefeed_path``, a per-batch CDC feed)."""
@@ -516,7 +303,6 @@ def start_upsert_stream(
         upsert_batch(
             batch, table_path, keys, seq_col, n_buckets, delete_col,
             changefeed_path=changefeed_path, batch_id=batch_id,
-            commit_mode=commit_mode,
         )
 
     writer = stream.writeStream.foreachBatch(sink).option(
@@ -528,31 +314,26 @@ def start_upsert_stream(
 
 
 def read_current(spark: SparkSession, table_path: str) -> DataFrame:
-    """The current state (bucket column dropped). mergeSchema: after a
-    schema evolution, untouched buckets lack the new columns — the
-    union schema surfaces them as NULL there; the ``_schema`` marker
-    adds columns no surviving file carries at all. Auto-detects the
-    table's commit mode: manifest tables are read through each
-    bucket's pointer (rename-era buckets of a mid-migration table fall
-    back to their plain directory)."""
-    if _table_commit_mode(table_path) == "manifest":
-        paths = _manifest_bucket_paths(table_path)
-        fields = [
-            f for f in _schema_marker_fields(spark, table_path)
-            if f.name != "__bucket"
-        ]
-        if not paths:
-            from pyspark.sql.types import StructType
+    """The current state (bucket column dropped), read through each
+    bucket's pointer. mergeSchema: after a schema evolution, untouched
+    buckets lack the new columns — the union schema surfaces them as
+    NULL there; the ``_schema`` marker adds columns no surviving file
+    carries at all."""
+    return _read_buckets(spark, table_path, _bucket_paths(table_path))
 
-            return spark.createDataFrame([], StructType(fields))
-        return _union_marker_fields(
-            spark.read.option("mergeSchema", "true").parquet(*paths),
-            fields,
-        )
+
+def _read_buckets(
+    spark: SparkSession, table_path: str, paths: list[str]
+) -> DataFrame:
+    fields = [
+        f for f in _schema_marker_fields(spark, table_path)
+        if f.name != "__bucket"
+    ]
+    if not paths:
+        return spark.createDataFrame([], StructType(fields))
     return _union_marker_fields(
-        spark.read.option("mergeSchema", "true").parquet(table_path),
-        _schema_marker_fields(spark, table_path),
-    ).drop("__bucket")
+        spark.read.option("mergeSchema", "true").parquet(*paths), fields
+    )
 
 
 def lookup(
@@ -564,26 +345,20 @@ def lookup(
 ) -> DataFrame:
     """Point lookup: current row(s) for one key, reading ONE bucket
     directory — the read-side payoff of the bucket layout. The bucket
-    id is recomputed from the key (same hash the writer used) and
-    applied as a partition filter, so the scan prunes to
-    1/n_buckets of the table before any IO; the residual key equality
-    prunes row groups inside the bucket via parquet stats."""
+    id is recomputed from the key (same hash the writer used), so the
+    scan touches 1/n_buckets of the table before any IO; the residual
+    key equality prunes row groups inside the bucket via parquet
+    stats."""
     if len(keys) != len(values):
         raise ValueError("lookup: one value per key column")
-    manifest_table = _table_commit_mode(table_path) == "manifest"
-    if manifest_table:
-        # column types come from the schema marker (cheap: one
-        # zero-row footer) — the data read below touches ONE bucket
-        fields = _schema_marker_fields(spark, table_path)
-        dtypes = {f.name: f.dataType.simpleString() for f in fields}
-        if not dtypes:
-            dtypes = dict(read_current(spark, table_path).dtypes)
-    else:
-        table = _union_marker_fields(
-            spark.read.option("mergeSchema", "true").parquet(table_path),
-            _schema_marker_fields(spark, table_path),
-        )
-        dtypes = dict(table.dtypes)
+    # column types come from the schema marker (cheap: one zero-row
+    # footer) — the data read below touches ONE bucket
+    dtypes = {
+        f.name: f.dataType.simpleString()
+        for f in _schema_marker_fields(spark, table_path)
+    }
+    if not dtypes:
+        dtypes = dict(read_current(spark, table_path).dtypes)
     # xxhash64 is TYPE-sensitive: hash the literals at the stored
     # column types or the bucket comes out different from the writer's
     b = F.pmod(
@@ -596,26 +371,12 @@ def lookup(
         F.lit(n_buckets),
     )
     bucket = spark.range(1).select(b.alias("b")).collect()[0]["b"]
-    if manifest_table:
-        paths = _manifest_bucket_paths(table_path, [int(bucket)])
-        if not paths:
-            from pyspark.sql.types import StructType
-
-            return spark.createDataFrame(
-                [], StructType(
-                    [f for f in fields if f.name != "__bucket"]
-                )
-            )
-        df = _union_marker_fields(
-            spark.read.option("mergeSchema", "true").parquet(*paths),
-            fields,
-            exclude=("__bucket",),
-        )
-    else:
-        df = table.filter(F.col("__bucket") == int(bucket))
+    df = _read_buckets(
+        spark, table_path, _bucket_paths(table_path, [int(bucket)])
+    )
     for k, v in zip(keys, values):
         df = df.filter(F.col(k) == v)
-    return df.drop("__bucket") if not manifest_table else df
+    return df
 
 
 def read_changefeed(

@@ -7,7 +7,10 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from data_pipeline_project_using_telegram_and_aws_spark.session import get_spark
+from data_pipeline_project_using_telegram_and_aws_spark.session import (
+    get_spark,
+    local_cores,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -72,11 +75,9 @@ def spark():
     # tasks per stage. local[8] measured ~31% faster than local[32]
     # over a representative module subset (ABBA: 98.9/118.2 s at 8 vs
     # 153.0/161.1 s at 32 on this host), and local[8] is exactly what
-    # tools/run_core_tier.sh has always validated the suite under. An
-    # explicit $SPARK_GRAFT_CPUS still wins (the driver's scaling axis).
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    if cpus is None:
-        cpus = str(min(8, os.cpu_count() or 8))
+    # tools/run_core_tier.sh has always validated the suite under. A
+    # positive-integer $SPARK_GRAFT_CPUS still wins (session.local_cores).
+    cpus = local_cores(str(min(8, os.cpu_count() or 8)))
     s = get_spark("tests", master=f"local[{cpus}]", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s

@@ -1,18 +1,16 @@
-"""Generic two-mode directory commit (sources/commit.py): unit
-behavior plus a hypothesis model check — under ANY sequence of commits
-(either mode, each optionally crashing at the pointer replace, right
-after it, or during the write) a reader through resolve_dir sees
-either the last committed content or, for a crash AT/BEFORE the
-commit point, the previous one — never a torn or missing state.
-Pure-filesystem content (no Spark) keeps the model exact and the
-check fast."""
+"""Directory commit (sources/commit.py): unit behavior plus a
+hypothesis model check — under ANY sequence of commits (each
+optionally crashing at the pointer replace, right after it, or during
+the write) a reader through resolve_dir sees either the last committed
+content or, for a crash AT/BEFORE the commit point, the previous one —
+never a torn or missing state. Pure-filesystem content (no Spark)
+keeps the model exact and the check fast."""
 
 from __future__ import annotations
 
 import json
 from pathlib import Path
 
-import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from data_pipeline_project_using_telegram_and_aws_spark.sources import commit as cm
@@ -35,30 +33,19 @@ def _read(path: str):
     return json.loads(f.read_text())["v"]
 
 
-def test_rename_and_manifest_basics(tmp_path):
+def test_manifest_commit_basics(tmp_path):
     p = str(tmp_path / "dir")
+    # never committed: readers see the directory itself
+    assert cm.manifest(p) is None and cm.resolve_dir(p) == p
     cm.commit_dir(p, _write_payload(1))
-    assert _read(p) == 1 and cm.manifest(p) is None
+    assert _read(p) == 1 and cm.manifest(p) == {"dir": ".v0"}
     cm.commit_dir(p, _write_payload(2))
-    assert _read(p) == 2
-    # migrate
-    cm.commit_dir(p, _write_payload(3), mode="manifest")
-    assert _read(p) == 3 and cm.manifest(p) == {"dir": ".v0"}
-    cm.commit_dir(p, _write_payload(4), mode="manifest")
-    assert _read(p) == 4 and cm.manifest(p) == {"dir": ".v1"}
+    assert _read(p) == 2 and cm.manifest(p) == {"dir": ".v1"}
     assert not (Path(p) / ".v0").exists()  # superseded version swept
-    with pytest.raises(ValueError, match="manifest"):
-        cm.commit_dir(p, _write_payload(5), mode="rename")
-    assert _read(p) == 4
-    with pytest.raises(ValueError, match="mode"):
-        cm.commit_dir(p, _write_payload(5), mode="copy")
 
 
 _ops = st.lists(
-    st.tuples(
-        st.sampled_from(["rename", "manifest"]),
-        st.sampled_from(["none", "in_write", "at_replace", "post_replace"]),
-    ),
+    st.sampled_from(["none", "in_write", "at_replace", "post_replace"]),
     min_size=1,
     max_size=6,
 )
@@ -75,7 +62,7 @@ def test_commit_dir_model_check(tmp_path_factory, ops):
     p = str(tmp_path / "dir")
     real_replace = cm._replace
     committed = None  # the model: last successfully visible value
-    for i, (mode, crash) in enumerate(ops):
+    for i, crash in enumerate(ops):
         value = i + 10
 
         def boom_write(target, _v=value, _c=crash):
@@ -92,24 +79,18 @@ def test_commit_dir_model_check(tmp_path_factory, ops):
 
         cm._replace = flaky_replace
         try:
-            cm.commit_dir(p, boom_write, mode=mode)
-            ok = True  # NB: rename mode never calls _replace, so the
-            # at/post_replace injections simply don't fire there and
-            # the commit completes — which IS the model's expectation
+            cm.commit_dir(p, boom_write)
+            ok = True
         except RuntimeError:
             ok = False
-        except ValueError:
-            ok = None  # rejected (rename after migration): no change
         finally:
             cm._replace = real_replace
-        if ok:
-            committed = value
-        elif ok is False and mode == "manifest" and crash == "post_replace":
-            committed = value  # committed, then crashed during cleanup
+        if ok or crash == "post_replace":
+            committed = value  # post_replace: committed, then crashed
         # every other crash is before/at the commit point: old value
-        assert _read(p) == committed, (ops, i, mode, crash)
-    # convergence: one clean manifest commit always lands
-    cm.commit_dir(p, _write_payload(999), mode="manifest")
+        assert _read(p) == committed, (ops, i, crash)
+    # convergence: one clean commit always lands
+    cm.commit_dir(p, _write_payload(999))
     assert _read(p) == 999
     versions = [d.name for d in Path(p).glob(".v*")]
     assert len(versions) == 1

@@ -4,6 +4,9 @@ resume across stream restarts, and query parity with the batch path."""
 
 from __future__ import annotations
 
+import os
+from urllib.parse import urlparse
+
 import pytest
 from pyspark.sql import Row, functions as F
 from pyspark.sql import types as T
@@ -153,4 +156,43 @@ def test_compaction_composes_with_maintained_index(spark, centroids, tmp_path):
     # ingest_batch survives as a plain column; rows intact
     assert spark.table(table).count() == 24
     assert "ingest_batch" in spark.table(table).columns
+    spark.sql(f"DROP TABLE {table}")
+
+
+def test_location_swap_refuses_partitioned_index(spark, centroids, tmp_path):
+    """swap="location" moves only the table root while the catalog
+    keeps the ingest_batch partitions, which would leave every query
+    silently empty; on a partitioned table it must raise before
+    writing anything, leaving the table answering as before."""
+    from data_pipeline_project_using_telegram_and_aws_spark.sources.bucketing import (
+        compact_bucketed_table,
+    )
+
+    table = "ivf_maint_loc"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    upsert_index_batch(_vectors(spark, range(12)), 0, table, centroids, buckets=4)
+    upsert_index_batch(_vectors(spark, range(12, 24)), 1, table, centroids, buckets=4)
+    queries = _vectors(spark, range(3))
+
+    def topk():
+        return sorted(
+            (r.query_id, r.vec_id, r.cos_sim, r.ivf_rank)
+            for r in ivf_topk_from_table(
+                spark, table, queries, centroids, nprobe=1, k=3
+            ).collect()
+        )
+
+    before = topk()
+    location = spark.sql(f"DESCRIBE FORMATTED {table}").where(
+        "col_name = 'Location'"
+    ).collect()[0]["data_type"]
+    with pytest.raises(ValueError, match="partitioned"):
+        compact_bucketed_table(spark, table, swap="location")
+    assert topk() == before and len(before) > 0
+    assert spark.sql(f"DESCRIBE FORMATTED {table}").where(
+        "col_name = 'Location'"
+    ).collect()[0]["data_type"] == location
+    assert not spark.catalog.tableExists(f"{table}__compacting")
+    # nothing written: no version directory beside the table root
+    assert not os.path.exists(urlparse(location).path + "__versions")
     spark.sql(f"DROP TABLE {table}")

@@ -309,11 +309,10 @@ def test_rebuild_distinct_view_recovers_after_removals(spark, tmp_path):
     } == exact() == {("eu",): 2, ("us",): 2}
 
 
-# ------------------------------------------- manifest-mode view commits
-# The object-store-safe commit (sources/commit.py) under the IVM swap:
-# pointer-resolved reads, crash at the pointer replace leaves the OLD
-# view fully readable (rename mode's remove+rename pair has a narrow
-# lose-the-view window there), migration is one-way.
+# ------------------------------------------------------- view commits
+# The pointer commit (sources/commit.py) under the IVM swap:
+# pointer-resolved reads, and a crash at the pointer replace leaves the
+# OLD view fully readable.
 
 from pathlib import Path
 
@@ -328,23 +327,18 @@ def _up(spark, rows, bid, table):
     )
 
 
-def test_manifest_view_matches_rename_twin_and_survives_crash(
-    spark, tmp_path, monkeypatch
-):
+def test_view_commit_survives_crash(spark, tmp_path, monkeypatch):
     table = str(tmp_path / "t")
     feed = table + "_changefeed"
     vm = str(tmp_path / "view_m")
-    vr = str(tmp_path / "view_r")
 
     _up(spark, [(1, 1, "eu", 10.0, False), (2, 1, "us", 5.0, False)], 0, table)
     _up(spark, [(1, 2, "us", 7.0, False), (3, 2, "eu", 2.0, False)], 1, table)
-    for path, mode in ((vm, "manifest"), (vr, "rename")):
-        n = refresh_grouped_view(
-            spark, feed, path, ["region"], ["balance"], VALUE_SCHEMA,
-            commit_mode=mode,
-        )
-        assert n == 2
-    assert _view(spark, vm) == _view(spark, vr) == _recompute(spark, table)
+    n = refresh_grouped_view(
+        spark, feed, vm, ["region"], ["balance"], VALUE_SCHEMA,
+    )
+    assert n == 2
+    assert _view(spark, vm) == _recompute(spark, table)
     assert (Path(vm) / "_dir_manifest").exists()
     assert (Path(vm) / ".v0").exists()
 
@@ -359,7 +353,6 @@ def test_manifest_view_matches_rename_twin_and_survives_crash(
     with pytest.raises(RuntimeError, match="injected crash"):
         refresh_grouped_view(
             spark, feed, vm, ["region"], ["balance"], VALUE_SCHEMA,
-            commit_mode="manifest",
         )
     monkeypatch.undo()
     assert _view(spark, vm) == before  # pointer never moved
@@ -367,7 +360,6 @@ def test_manifest_view_matches_rename_twin_and_survives_crash(
     # retry converges, sweeps the orphaned version, matches recompute
     n = refresh_grouped_view(
         spark, feed, vm, ["region"], ["balance"], VALUE_SCHEMA,
-        commit_mode="manifest",
     )
     assert n == 1
     assert _view(spark, vm) == _recompute(spark, table)
@@ -392,51 +384,9 @@ def test_manifest_view_matches_rename_twin_and_survives_crash(
     try:
         refresh_grouped_view(
             spark, feed, vm, ["region"], ["balance"], VALUE_SCHEMA,
-            commit_mode="manifest",
         )
     except RuntimeError:
         pass
     finally:
         monkeypatch.undo()
     assert _view(spark, vm) == _recompute(spark, table)
-
-
-def test_manifest_view_migration_is_one_way(spark, tmp_path):
-    table = str(tmp_path / "t")
-    feed = table + "_changefeed"
-    view = str(tmp_path / "view")
-    _up(spark, [(1, 1, "eu", 10.0, False)], 0, table)
-    refresh_grouped_view(
-        spark, feed, view, ["region"], ["balance"], VALUE_SCHEMA,
-    )
-    assert not (Path(view) / "_dir_manifest").exists()
-    before = _view(spark, view)
-
-    # migrate on the next refresh; content carried, legacy files retired
-    _up(spark, [(2, 2, "us", 4.0, False)], 1, table)
-    refresh_grouped_view(
-        spark, feed, view, ["region"], ["balance"], VALUE_SCHEMA,
-        commit_mode="manifest",
-    )
-    assert (Path(view) / "_dir_manifest").exists()
-    assert _view(spark, view) == _recompute(spark, table)
-    # no rename-era parquet left at the root
-    root_files = [
-        p.name for p in Path(view).iterdir()
-        if not p.name.startswith((".v", "_dir_manifest"))
-    ]
-    assert root_files == []
-
-    # a rename-mode attempt must raise — but only a refresh that has
-    # work to commit reaches the commit (a cursor no-op never writes)
-    _up(spark, [(3, 3, "eu", 9.0, False)], 2, table)
-    with pytest.raises(ValueError, match="manifest"):
-        refresh_grouped_view(
-            spark, feed, view, ["region"], ["balance"], VALUE_SCHEMA,
-        )
-    # the failed commit changed nothing readable; manifest mode applies
-    refresh_grouped_view(
-        spark, feed, view, ["region"], ["balance"], VALUE_SCHEMA,
-        commit_mode="manifest",
-    )
-    assert _view(spark, view) == _recompute(spark, table)

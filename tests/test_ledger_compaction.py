@@ -10,6 +10,7 @@ from __future__ import annotations
 from pathlib import Path
 
 import pytest
+from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F, types as T
 
 from data_pipeline_project_using_telegram_and_aws_spark.operators.frequency import cms_ledger
@@ -55,107 +56,6 @@ def _cms_fixture(spark, tmp_path):
         ]["est"]
 
     return led, hot_est
-
-
-def test_crash_between_commit_and_delete_never_double_counts(
-    spark, tmp_path, monkeypatch
-):
-    """THE regression for the old two-step hazard: kill after the
-    baseline commit but before the folded partitions are deleted. The
-    folded counters now exist in baseline AND batch partitions on
-    disk; the marker must keep every reader from summing them twice."""
-    led, hot_est = _cms_fixture(spark, tmp_path)
-    before = hot_est()
-
-    import data_pipeline_project_using_telegram_and_aws_spark.streaming.stat_ledgers as sl
-
-    def boom(path, through):
-        raise RuntimeError("injected crash before partition deletion")
-
-    monkeypatch.setattr(sl, "delete_folded", boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        compact_stat_ledger(spark, led, 1, "cms")
-    monkeypatch.undo()
-
-    # the dangerous on-disk state: baseline + still-present folded parts
-    parts = {p.name for p in Path(led).glob("ingest_batch=*")}
-    assert parts == {
-        "ingest_batch=-1",
-        "ingest_batch=0",
-        "ingest_batch=1",
-        "ingest_batch=2",
-    }
-    assert ledger_compaction.compacted_through(led) == 1
-    assert hot_est() == before  # marker excludes the folded partitions
-
-    # a later compaction sweeps the stragglers and converges
-    compact_stat_ledger(spark, led, 2, "cms")
-    assert hot_est() == before
-    parts = {p.name for p in Path(led).glob("ingest_batch=*")}
-    assert parts == {"ingest_batch=-1"}
-
-
-def test_crash_before_commit_is_a_clean_rollback(
-    spark, tmp_path, monkeypatch
-):
-    """Kill before the commit rename: the staged baseline is discarded
-    on the next read and nothing changed."""
-    led, hot_est = _cms_fixture(spark, tmp_path)
-    before = hot_est()
-
-    def boom(src, dst):
-        raise RuntimeError("injected crash before commit")
-
-    monkeypatch.setattr(ledger_compaction, "_rename", boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        compact_stat_ledger(spark, led, 1, "cms")
-    monkeypatch.undo()
-
-    assert (Path(led) / ".compact_staging").exists()
-    assert ledger_compaction.compacted_through(led) is None
-    # reads are right with the dead staging still on disk (dot-dirs
-    # are invisible to Spark) and deliberately do NOT delete it — a
-    # reader must never kill a live compactor's staging
-    assert hot_est() == before
-    assert (Path(led) / ".compact_staging").exists()
-
-    compact_stat_ledger(spark, led, 1, "cms")  # retry sweeps + converges
-    assert hot_est() == before
-    assert not (Path(led) / ".compact_staging").exists()
-
-
-def test_crash_between_swap_renames_rolls_back_old_baseline(
-    spark, tmp_path, monkeypatch
-):
-    """With a prior baseline in place, kill between the two swap
-    renames (old baseline already moved to trash, new one not yet
-    live): recovery must restore the old baseline, not lose it."""
-    led, hot_est = _cms_fixture(spark, tmp_path)
-    compact_stat_ledger(spark, led, 0, "cms")  # prior baseline
-    before = hot_est()
-
-    real_rename = ledger_compaction._rename
-    calls = {"n": 0}
-
-    def second_rename_dies(src, dst):
-        calls["n"] += 1
-        if calls["n"] == 2:  # 1st: base->trash, 2nd: staging->base
-            raise RuntimeError("injected crash mid-swap")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(ledger_compaction, "_rename", second_rename_dies)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        compact_stat_ledger(spark, led, 1, "cms")
-    monkeypatch.undo()
-
-    assert not (Path(led) / "ingest_batch=-1").exists()
-    assert (Path(led) / ".compact_trash").exists()
-    assert hot_est() == before  # read recovers: trash rolled back
-    assert ledger_compaction.compacted_through(led) == 0
-
-    compact_stat_ledger(spark, led, 1, "cms")  # retry converges
-    assert hot_est() == before
-    assert ledger_compaction.compacted_through(led) == 1
 
 
 def test_hll_ledger_n_rows_survives_mid_compaction_crash(
@@ -239,14 +139,85 @@ def test_heavy_hitter_hint_is_enforced(spark, tmp_path):
         )
 
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+def test_manifest_crash_between_commit_and_delete_never_double_counts(
+    spark, tmp_path, monkeypatch
+):
+    """Post-commit crash: pointer moved, folded partitions still on
+    disk. The manifest horizon must keep every reader from summing the
+    folded mass twice — THE regression for the old write-then-delete
+    hazard, under the commit model an object store can honor."""
+    led, hot_est = _cms_fixture(spark, tmp_path)
+    before = hot_est()
+
+    import data_pipeline_project_using_telegram_and_aws_spark.streaming.stat_ledgers as sl
+
+    def boom(path, through):
+        raise RuntimeError("injected crash before partition deletion")
+
+    monkeypatch.setattr(sl, "delete_folded", boom)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        compact_stat_ledger(spark, led, 1, "cms")
+    monkeypatch.undo()
+
+    assert (Path(led) / ".baseline_v0").exists()
+    assert ledger_compaction.compacted_through(led) == 1
+    assert hot_est() == before
+
+    # convergence: a later manifest compaction sweeps everything
+    compact_stat_ledger(spark, led, 2, "cms")
+    assert hot_est() == before
+    assert not any(Path(led).glob("ingest_batch=*"))
+    versions = [d.name for d in Path(led).glob(".baseline_v*")]
+    assert versions == [".baseline_v1"]
+
+
+def test_manifest_crash_before_commit_is_a_clean_rollback(
+    spark, tmp_path, monkeypatch
+):
+    """Kill at the pointer replace: the versioned dir and tmp manifest
+    are unreferenced garbage; reads are the exact pre-compaction
+    answer and leave the garbage alone (a reader must never delete a
+    live compactor's write); the retry sweeps + converges. With a
+    prior baseline in place, the same kill keeps the OLD baseline and
+    horizon live."""
+    led, hot_est = _cms_fixture(spark, tmp_path)
+    before = hot_est()
+
+    def boom(src, dst):
+        raise RuntimeError("injected crash at manifest replace")
+
+    monkeypatch.setattr(ledger_compaction, "_replace", boom)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        compact_stat_ledger(spark, led, 1, "cms")
+    monkeypatch.undo()
+
+    assert (Path(led) / ".baseline_v0").exists()  # orphaned, unreferenced
+    assert (Path(led) / "_baseline_manifest.tmp").exists()
+    assert ledger_compaction.compacted_through(led) is None
+    assert hot_est() == before
+    assert (Path(led) / ".baseline_v0").exists()
+
+    compact_stat_ledger(spark, led, 1, "cms")
+    assert hot_est() == before
+    assert not (Path(led) / "_baseline_manifest.tmp").exists()
+    assert ledger_compaction.compacted_through(led) == 1
+
+    monkeypatch.setattr(ledger_compaction, "_replace", boom)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        compact_stat_ledger(spark, led, 2, "cms")
+    monkeypatch.undo()
+    assert ledger_compaction.compacted_through(led) == 1
+    assert hot_est() == before
+
 
 _ops = st.lists(
     st.one_of(
         st.tuples(st.just("append"), st.integers(0, 5)),
         st.tuples(
             st.just("compact"),
-            st.sampled_from(["none", "pre_commit", "mid_swap", "post_commit"]),
+            st.sampled_from(
+                ["none", "pre_commit", "post_replace", "post_commit"]
+            ),
         ),
     ),
     min_size=2,
@@ -260,206 +231,14 @@ _ops = st.lists(
     suppress_health_check=list(HealthCheck),
 )
 @given(_ops)
-def test_compaction_model_check(spark, tmp_path_factory, ops):
-    """Model check: under ANY interleaving of appends and compactions —
-    each compaction crashing at any protocol step or not at all — the
-    ledger's point estimates stay bit-identical to a shadow twin that
-    received the same appends and was NEVER compacted. Counter-sum
-    associativity makes the shadow the exact oracle; any double-count,
-    drop, or marker bug breaks the equality."""
-    import data_pipeline_project_using_telegram_and_aws_spark.streaming.stat_ledgers as sl
-
-    tmp_path = tmp_path_factory.mktemp("model")
-    main, shadow = str(tmp_path / "main"), str(tmp_path / "shadow")
-    items = spark.createDataFrame(
-        [("hot",), ("cold_3",)], "item string"
-    )
-
-    def est(path):
-        return sorted(
-            (r["item"], r["est"])
-            for r in counts_so_far(
-                spark, path, items, depth=2, width=64
-            ).collect()
-        )
-
-    real_rename = ledger_compaction._rename
-    real_delete = sl.delete_folded
-    next_batch = 0
-    appended = False
-    for op in ops:
-        if op[0] == "append":
-            chunk = _chunk(spark, op[1] * 1000, 120)
-            rows = cms_ledger(chunk, "item", depth=2, width=64)
-            _land(rows, next_batch, main)
-            _land(rows, next_batch, shadow)
-            next_batch += 1
-            appended = True
-        else:
-            if not appended:
-                continue
-            mode = op[1]
-            calls = {"n": 0}
-
-            def flaky_rename(src, dst, _m=mode, _c=calls):
-                _c["n"] += 1
-                if _m == "pre_commit" and _c["n"] == 1:
-                    raise RuntimeError("injected pre_commit")
-                if _m == "mid_swap" and _c["n"] == 2:
-                    raise RuntimeError("injected mid_swap")
-                return real_rename(src, dst)
-
-            def flaky_delete(path, through):
-                raise RuntimeError("injected post_commit")
-
-            ledger_compaction._rename = (
-                flaky_rename if mode in ("pre_commit", "mid_swap")
-                else real_rename
-            )
-            sl.delete_folded = (
-                flaky_delete if mode == "post_commit" else real_delete
-            )
-            try:
-                compact_stat_ledger(spark, main, next_batch - 1, "cms")
-            except RuntimeError:
-                pass
-            finally:
-                ledger_compaction._rename = real_rename
-                sl.delete_folded = real_delete
-        assert est(main) == est(shadow), (op, ops)
-
-    # a final clean compaction converges and still agrees
-    if appended:
-        compact_stat_ledger(spark, main, next_batch - 1, "cms")
-        assert est(main) == est(shadow), ops
-        parts = {
-            p.name for p in Path(main).glob("ingest_batch=*")
-        }
-        assert parts == {"ingest_batch=-1"}, (parts, ops)
-
-
-# -------------------------------------------------- manifest-mode commit
-# The object-store-safe path: same kill-between-steps suite, where the
-# commit point is the atomic single-file manifest replace instead of a
-# directory rename (sources/lake.py's note, implemented for real).
-
-
-def test_manifest_crash_between_commit_and_delete_never_double_counts(
-    spark, tmp_path, monkeypatch
-):
-    """Post-commit crash: pointer moved, folded partitions still on
-    disk. The manifest horizon must keep every reader from summing the
-    folded mass twice — the same regression as rename mode, under the
-    commit model an object store can actually honor."""
-    led, hot_est = _cms_fixture(spark, tmp_path)
-    before = hot_est()
-
-    import data_pipeline_project_using_telegram_and_aws_spark.streaming.stat_ledgers as sl
-
-    def boom(path, through):
-        raise RuntimeError("injected crash before partition deletion")
-
-    monkeypatch.setattr(sl, "delete_folded", boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        compact_stat_ledger(spark, led, 1, "cms", commit_mode="manifest")
-    monkeypatch.undo()
-
-    assert (Path(led) / ".baseline_v0").exists()
-    assert ledger_compaction.compacted_through(led) == 1
-    assert hot_est() == before
-
-    # convergence: a later manifest compaction sweeps everything
-    compact_stat_ledger(spark, led, 2, "cms", commit_mode="manifest")
-    assert hot_est() == before
-    assert not any(Path(led).glob("ingest_batch=*"))
-    versions = [d.name for d in Path(led).glob(".baseline_v*")]
-    assert versions == [".baseline_v1"]
-
-
-def test_manifest_crash_before_commit_is_a_clean_rollback(
-    spark, tmp_path, monkeypatch
-):
-    """Kill at the pointer replace: the versioned dir and tmp manifest
-    are unreferenced garbage; reads are the exact pre-compaction
-    answer and the retry sweeps + converges."""
-    led, hot_est = _cms_fixture(spark, tmp_path)
-    before = hot_est()
-
-    def boom(src, dst):
-        raise RuntimeError("injected crash at manifest replace")
-
-    monkeypatch.setattr(ledger_compaction, "_replace", boom)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        compact_stat_ledger(spark, led, 1, "cms", commit_mode="manifest")
-    monkeypatch.undo()
-
-    assert (Path(led) / ".baseline_v0").exists()  # orphaned, unreferenced
-    assert (Path(led) / "_baseline_manifest.tmp").exists()
-    assert ledger_compaction.compacted_through(led) is None
-    assert hot_est() == before
-
-    compact_stat_ledger(spark, led, 1, "cms", commit_mode="manifest")
-    assert hot_est() == before
-    assert not (Path(led) / "_baseline_manifest.tmp").exists()
-    assert ledger_compaction.compacted_through(led) == 1
-
-
-def test_manifest_migration_from_rename_is_one_way(
-    spark, tmp_path
-):
-    """A rename-era ledger migrates on its first manifest commit: the
-    legacy ingest_batch=-1 mass is folded into the pointer's baseline
-    and the legacy dir retired; a later rename-mode commit must raise
-    rather than leave two competing pointers."""
-    led, hot_est = _cms_fixture(spark, tmp_path)
-    compact_stat_ledger(spark, led, 0, "cms")  # rename-era baseline
-    before = hot_est()
-    assert (Path(led) / "ingest_batch=-1").exists()
-
-    compact_stat_ledger(spark, led, 1, "cms", commit_mode="manifest")
-    assert hot_est() == before
-    assert not (Path(led) / "ingest_batch=-1").exists()
-    assert ledger_compaction.compacted_through(led) == 1
-
-    with pytest.raises(ValueError, match="manifest"):
-        compact_stat_ledger(spark, led, 2, "cms")
-    assert hot_est() == before  # failed commit changed nothing
-
-    # fold the rest; reads ride the pointer alone (no visible parts)
-    compact_stat_ledger(spark, led, 2, "cms", commit_mode="manifest")
-    assert hot_est() == before
-    assert not any(Path(led).glob("ingest_batch=*"))
-
-
-_mops = st.lists(
-    st.one_of(
-        st.tuples(st.just("append"), st.integers(0, 5)),
-        st.tuples(
-            st.just("compact"),
-            st.sampled_from(
-                ["none", "pre_commit", "post_replace", "post_commit"]
-            ),
-            st.sampled_from(["rename", "manifest"]),
-        ),
-    ),
-    min_size=2,
-    max_size=5,
-)
-
-
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=list(HealthCheck),
-)
-@given(_mops)
 def test_manifest_compaction_model_check(spark, tmp_path_factory, ops):
-    """Model check across BOTH commit modes interleaved: appends and
-    compactions (each crashing at the pre-commit replace, right after
-    the committed replace with zero cleanup, after commit before
-    deletion, or not at all; rename-mode attempts on a migrated ledger
-    raise and must change nothing) vs the never-compacted shadow twin.
-    Estimates must stay bit-identical at every step."""
+    """Model check: under ANY interleaving of appends and compactions —
+    each crashing at the pointer replace, right after the committed
+    replace with zero cleanup, after commit before deletion, or not at
+    all — the ledger's point estimates stay bit-identical to a shadow
+    twin that received the same appends and was NEVER compacted.
+    Counter-sum associativity makes the shadow the exact oracle; any
+    double-count, drop, or horizon bug breaks the equality."""
     import data_pipeline_project_using_telegram_and_aws_spark.streaming.stat_ledgers as sl
 
     tmp_path = tmp_path_factory.mktemp("mmodel")
@@ -474,7 +253,6 @@ def test_manifest_compaction_model_check(spark, tmp_path_factory, ops):
             ).collect()
         )
 
-    real_rename = ledger_compaction._rename
     real_replace = ledger_compaction._replace
     real_delete = sl.delete_folded
     next_batch = 0
@@ -490,16 +268,7 @@ def test_manifest_compaction_model_check(spark, tmp_path_factory, ops):
         else:
             if not appended:
                 continue
-            _, crash, mode = op
-            calls = {"n": 0}
-
-            def flaky_rename(src, dst, _m=crash, _c=calls):
-                _c["n"] += 1
-                if _m == "pre_commit" and _c["n"] == 1:
-                    raise RuntimeError("injected pre_commit")
-                if _m == "post_replace" and _c["n"] == 2:
-                    raise RuntimeError("injected post_replace")
-                return real_rename(src, dst)
+            crash = op[1]
 
             def flaky_replace(src, dst, _m=crash):
                 if _m == "pre_commit":
@@ -511,46 +280,22 @@ def test_manifest_compaction_model_check(spark, tmp_path_factory, ops):
             def flaky_delete(path, through):
                 raise RuntimeError("injected post_commit")
 
-            if mode == "rename":
-                ledger_compaction._rename = (
-                    flaky_rename
-                    if crash in ("pre_commit", "post_replace")
-                    else real_rename
-                )
-            else:
-                ledger_compaction._replace = (
-                    flaky_replace
-                    if crash in ("pre_commit", "post_replace")
-                    else real_replace
-                )
+            ledger_compaction._replace = flaky_replace
             sl.delete_folded = (
                 flaky_delete if crash == "post_commit" else real_delete
             )
             try:
-                compact_stat_ledger(
-                    spark, main, next_batch - 1, "cms", commit_mode=mode
-                )
+                compact_stat_ledger(spark, main, next_batch - 1, "cms")
             except RuntimeError:
                 pass
-            except ValueError:
-                pass  # rename attempt on a migrated ledger: rejected
             finally:
-                ledger_compaction._rename = real_rename
                 ledger_compaction._replace = real_replace
                 sl.delete_folded = real_delete
         assert est(main) == est(shadow), (op, ops)
 
+    # a final clean compaction converges and still agrees
     if appended:
-        compact_stat_ledger(
-            spark, main, next_batch - 1, "cms", commit_mode="manifest"
-        )
+        compact_stat_ledger(spark, main, next_batch - 1, "cms")
         assert est(main) == est(shadow), ops
-        # converged physical state. If nothing was left to fold the
-        # call early-returns WITHOUT migrating (documented: no fold
-        # work -> no commit), so a rename-converged ledger is legal.
-        if ledger_compaction._manifest(main) is not None:
-            assert not any(Path(main).glob("ingest_batch=*")), ops
-            assert len(list(Path(main).glob(".baseline_v*"))) == 1, ops
-        else:
-            parts = {d.name for d in Path(main).glob("ingest_batch=*")}
-            assert parts == {"ingest_batch=-1"}, (parts, ops)
+        assert not any(Path(main).glob("ingest_batch=*")), ops
+        assert len(list(Path(main).glob(".baseline_v*"))) == 1, ops

@@ -130,9 +130,13 @@ def test_stream_ledger_matches_batch_ledger(spark, tmp_path):
 
 
 def test_compact_ledger_folds_old_batches(spark, tmp_path):
-    """Compaction: batches ≤ watermark fold into one ingest_batch=-1
-    baseline per group; newer partitions untouched; merged totals and
-    n_rows unchanged; compacting twice is a no-op."""
+    """Compaction: batches ≤ watermark fold into one baseline row per
+    group (read back as ingest_batch = -1); newer partitions untouched;
+    merged totals and n_rows unchanged; compacting twice is a no-op."""
+    from data_pipeline_project_using_telegram_and_aws_spark.streaming.ledger_compaction import (
+        compacted_through,
+        read_ledger,
+    )
     from data_pipeline_project_using_telegram_and_aws_spark.streaming.sketch_ledger import (
         compact_ledger,
     )
@@ -147,7 +151,8 @@ def test_compact_ledger_folds_old_batches(spark, tmp_path):
     }
 
     compact_ledger(spark, path, through_batch=1, by=["source"])
-    ledger = spark.read.parquet(path)
+    assert compacted_through(path) == 1
+    ledger = read_ledger(spark, path)
     batches = {r["ingest_batch"] for r in ledger.select("ingest_batch").distinct().collect()}
     assert batches == {-1, 2}
     # the baseline carries one row per group seen in batches 0-1
@@ -159,7 +164,8 @@ def test_compact_ledger_folds_old_batches(spark, tmp_path):
     assert after == before
 
     compact_ledger(spark, path, through_batch=1, by=["source"])  # no-op
+    assert compacted_through(path) == 1
     assert {
         r["ingest_batch"]
-        for r in spark.read.parquet(path).select("ingest_batch").distinct().collect()
+        for r in read_ledger(spark, path).select("ingest_batch").distinct().collect()
     } == {-1, 2}

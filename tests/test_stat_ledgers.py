@@ -98,13 +98,22 @@ def test_cms_stream_matches_batch_build(spark, tmp_path):
     assert got["est"] >= 1000  # 1/5 of 5000 rows, never undercounts
 
 
+def _batches(ledger):
+    return {
+        r["ingest_batch"]
+        for r in ledger.select("ingest_batch").distinct().collect()
+    }
+
+
 def test_compaction_preserves_answers(spark, tmp_path):
     """Folding old batch partitions into the -1 baseline changes no
     answer: quantile samples stay bit-identical (set-union merge is
     exact), CMS point estimates stay equal (counter sums); folded
     partitions disappear, the baseline appears."""
-    from pathlib import Path
-
+    from data_pipeline_project_using_telegram_and_aws_spark.streaming.ledger_compaction import (
+        compacted_through,
+        read_ledger,
+    )
     from data_pipeline_project_using_telegram_and_aws_spark.streaming.stat_ledgers import (
         compact_stat_ledger,
     )
@@ -144,8 +153,8 @@ def test_compaction_preserves_answers(spark, tmp_path):
     assert c_after == c_before
 
     for path in (qled, cled):
-        parts = {p.name for p in Path(path).glob("ingest_batch=*")}
-        assert parts == {"ingest_batch=-1", "ingest_batch=2"}
+        assert compacted_through(path) == 1
+        assert _batches(read_ledger(spark, path)) == {-1, 2}
 
 
 def test_streamed_heavy_hitters_guaranteed_recall(spark, tmp_path):
@@ -200,8 +209,10 @@ def test_candidate_compaction_preserves_heavy_hitters(spark, tmp_path):
     """Folding candidate partitions into the deduped baseline changes
     no heavy-hitter answer; folded partitions disappear; re-compacting
     is a no-op (set semantics)."""
-    from pathlib import Path
-
+    from data_pipeline_project_using_telegram_and_aws_spark.streaming.ledger_compaction import (
+        compacted_through,
+        read_ledger,
+    )
     from data_pipeline_project_using_telegram_and_aws_spark.streaming.stat_ledgers import (
         compact_candidates,
         heavy_hitters_so_far,
@@ -240,8 +251,8 @@ def test_candidate_compaction_preserves_heavy_hitters(spark, tmp_path):
         )
     )
     assert after == before
-    parts = {p.name for p in Path(cand).glob("ingest_batch=*")}
-    assert parts == {"ingest_batch=-1", "ingest_batch=2"}
+    assert compacted_through(cand) == 1
+    assert _batches(read_ledger(spark, cand)) == {-1, 2}
     compact_candidates(spark, cand, through_batch=2)
     final = sorted(
         map(

@@ -1,8 +1,7 @@
-"""Per-bucket manifest commits for the keyed upsert table
-(streaming/upsert.py commit_mode="manifest"): the sources/commit.py
-pointer protocol applied at bucket granularity. Pins rename-mode
-equivalence, surgical (untouched buckets' pointers unchanged) writes,
-lazy one-way migration from rename-era tables, kill-between-steps
+"""Per-bucket pointer commits for the keyed upsert table
+(streaming/upsert.py): the sources/commit.py pointer protocol applied
+at bucket granularity. Pins reads through the pointers, surgical
+(untouched buckets' pointers unchanged) writes, kill-between-steps
 crash consistency with replay convergence, tombstone-to-empty
 readability, schema evolution, and a hypothesis model check against a
 plain dict with crash+retry interleavings."""
@@ -48,17 +47,13 @@ def _bucket_manifests(path):
     }
 
 
-def test_manifest_mode_matches_rename_mode(spark, tmp_path):
+def test_buckets_commit_and_read_through_pointers(spark, tmp_path):
     rows1 = [(1, "a", 1), (2, "b", 1), (3, "c", 1)]
     rows2 = [(2, "B", 2), (4, "d", 1)]
-    pm, pr = str(tmp_path / "m"), str(tmp_path / "r")
+    pm = str(tmp_path / "m")
     for rows in (rows1, rows2):
-        upsert_batch(_batch(spark, rows), pm, KEYS, "seq",
-                     n_buckets=4, commit_mode="manifest")
-        upsert_batch(_batch(spark, rows), pr, KEYS, "seq", n_buckets=4)
-    assert _state(spark, pm) == _state(spark, pr) == {
-        1: "a", 2: "B", 3: "c", 4: "d",
-    }
+        upsert_batch(_batch(spark, rows), pm, KEYS, "seq", n_buckets=4)
+    assert _state(spark, pm) == {1: "a", 2: "B", 3: "c", 4: "d"}
     # every bucket dir carries a committed pointer; no data files at
     # the bucket root (all content lives in version dirs)
     mans = _bucket_manifests(pm)
@@ -75,44 +70,15 @@ def test_untouched_bucket_pointers_unchanged(spark, tmp_path):
     p = str(tmp_path / "t")
     upsert_batch(
         _batch(spark, [(i, f"v{i}", 1) for i in range(16)]),
-        p, KEYS, "seq", n_buckets=8, commit_mode="manifest",
+        p, KEYS, "seq", n_buckets=8,
     )
     before = _bucket_manifests(p)
     upsert_batch(_batch(spark, [(1, "V1", 2)]), p, KEYS, "seq",
-                 n_buckets=8, commit_mode="manifest")
+                 n_buckets=8)
     after = _bucket_manifests(p)
     changed = [b for b in before if before[b] != after[b]]
     assert len(changed) == 1  # exactly key 1's bucket advanced
     assert _state(spark, p)[1] == "V1"
-
-
-def test_lazy_migration_from_rename_table(spark, tmp_path):
-    p = str(tmp_path / "t")
-    upsert_batch(
-        _batch(spark, [(i, f"v{i}", 1) for i in range(16)]),
-        p, KEYS, "seq", n_buckets=8,
-    )  # rename-era table
-    assert all(v is None for v in _bucket_manifests(p).values())
-    upsert_batch(_batch(spark, [(1, "V1", 2)]), p, KEYS, "seq",
-                 n_buckets=8, commit_mode="manifest")
-    mans = _bucket_manifests(p)
-    migrated = [b for b, v in mans.items() if v is not None]
-    assert len(migrated) == 1  # only the affected bucket folded
-    # the folded bucket's rename-era root files are swept
-    assert not list((Path(p) / migrated[0]).glob("*.parquet"))
-    # mixed table reads correctly through both layouts
-    want = {i: f"v{i}" for i in range(16)}
-    want[1] = "V1"
-    assert _state(spark, p) == want
-    assert [
-        (r.k, r.v)
-        for r in lookup(spark, p, KEYS, [1], n_buckets=8).collect()
-    ] == [(1, "V1")]
-    # migration is one-way
-    with pytest.raises(ValueError, match="manifest"):
-        upsert_batch(_batch(spark, [(2, "x", 3)]), p, KEYS, "seq",
-                     n_buckets=8)
-    assert _state(spark, p) == want  # the rejected merge changed nothing
 
 
 def test_tombstones_and_empty_table_stay_readable(spark, tmp_path):
@@ -121,12 +87,10 @@ def test_tombstones_and_empty_table_stay_readable(spark, tmp_path):
         _batch(spark, [(1, "a", 1, False), (2, "b", 1, False)],
                DEL_SCHEMA),
         p, KEYS, "seq", n_buckets=2, delete_col="deleted",
-        commit_mode="manifest",
     )
     upsert_batch(
         _batch(spark, [(1, None, 2, True)], DEL_SCHEMA),
         p, KEYS, "seq", n_buckets=2, delete_col="deleted",
-        commit_mode="manifest",
     )
     assert _state(spark, p) == {2: "b"}
     # delete the LAST key: every bucket holds a zero-row version but
@@ -134,7 +98,6 @@ def test_tombstones_and_empty_table_stay_readable(spark, tmp_path):
     upsert_batch(
         _batch(spark, [(2, None, 3, True)], DEL_SCHEMA),
         p, KEYS, "seq", n_buckets=2, delete_col="deleted",
-        commit_mode="manifest",
     )
     cur = read_current(spark, p)
     assert cur.count() == 0
@@ -143,7 +106,6 @@ def test_tombstones_and_empty_table_stay_readable(spark, tmp_path):
     upsert_batch(
         _batch(spark, [(5, "e", 4, False)], DEL_SCHEMA),
         p, KEYS, "seq", n_buckets=2, delete_col="deleted",
-        commit_mode="manifest",
     )
     assert _state(spark, p) == {5: "e"}
 
@@ -151,12 +113,11 @@ def test_tombstones_and_empty_table_stay_readable(spark, tmp_path):
 def test_schema_evolution_manifest_mode(spark, tmp_path):
     p = str(tmp_path / "t")
     upsert_batch(_batch(spark, [(1, "a", 1), (2, "b", 1)]), p, KEYS,
-                 "seq", n_buckets=2, commit_mode="manifest")
+                 "seq", n_buckets=2)
     evolved = spark.createDataFrame(
         [(2, "B", 2, "extra")], "k long, v string, seq long, w string"
     )
-    upsert_batch(evolved, p, KEYS, "seq", n_buckets=2,
-                 commit_mode="manifest")
+    upsert_batch(evolved, p, KEYS, "seq", n_buckets=2)
     rows = {
         r["k"]: (r["v"], r["w"])
         for r in read_current(spark, p).collect()
@@ -170,7 +131,7 @@ def test_schema_evolution_manifest_mode(spark, tmp_path):
 def test_crash_at_and_after_the_pointer_swap(spark, tmp_path):
     p = str(tmp_path / "t")
     upsert_batch(_batch(spark, [(1, "a", 1), (2, "b", 1)]), p, KEYS,
-                 "seq", n_buckets=2, commit_mode="manifest")
+                 "seq", n_buckets=2)
     base = _state(spark, p)
     real_replace = cm._replace
 
@@ -182,13 +143,13 @@ def test_crash_at_and_after_the_pointer_swap(spark, tmp_path):
     try:
         with pytest.raises(RuntimeError):
             upsert_batch(_batch(spark, [(1, "A", 2)]), p, KEYS, "seq",
-                         n_buckets=2, commit_mode="manifest")
+                         n_buckets=2)
     finally:
         cm._replace = real_replace
     assert _state(spark, p) == base
     # replay of the same batch converges
     upsert_batch(_batch(spark, [(1, "A", 2)]), p, KEYS, "seq",
-                 n_buckets=2, commit_mode="manifest")
+                 n_buckets=2)
     assert _state(spark, p) == {1: "A", 2: "b"}
 
     # crash right AFTER the commit point: committed, cleanup re-swept
@@ -200,13 +161,13 @@ def test_crash_at_and_after_the_pointer_swap(spark, tmp_path):
     try:
         with pytest.raises(RuntimeError):
             upsert_batch(_batch(spark, [(2, "B", 3)]), p, KEYS, "seq",
-                         n_buckets=2, commit_mode="manifest")
+                         n_buckets=2)
     finally:
         cm._replace = real_replace
     assert _state(spark, p) == {1: "A", 2: "B"}
     # replay is a no-op rewrite (idempotent winner rule)
     upsert_batch(_batch(spark, [(2, "B", 3)]), p, KEYS, "seq",
-                 n_buckets=2, commit_mode="manifest")
+                 n_buckets=2)
     assert _state(spark, p) == {1: "A", 2: "B"}
 
 
@@ -218,7 +179,7 @@ def test_mid_batch_crash_is_per_bucket_and_replay_heals(spark, tmp_path):
     # keys 0..7 across 4 buckets; pick two keys in different buckets
     upsert_batch(
         _batch(spark, [(i, f"v{i}", 1) for i in range(8)]),
-        p, KEYS, "seq", n_buckets=4, commit_mode="manifest",
+        p, KEYS, "seq", n_buckets=4,
     )
     base = _state(spark, p)
     real_replace = cm._replace
@@ -234,8 +195,7 @@ def test_mid_batch_crash_is_per_bucket_and_replay_heals(spark, tmp_path):
     cm._replace = die_on_second
     try:
         with pytest.raises(RuntimeError):
-            upsert_batch(batch, p, KEYS, "seq", n_buckets=4,
-                         commit_mode="manifest")
+            upsert_batch(batch, p, KEYS, "seq", n_buckets=4)
     finally:
         cm._replace = real_replace
     torn = _state(spark, p)
@@ -246,8 +206,7 @@ def test_mid_batch_crash_is_per_bucket_and_replay_heals(spark, tmp_path):
     assert any(v.startswith("V") for v in torn.values())  # some landed
     assert any(v.startswith("v") for v in torn.values())  # some didn't
     # replay the SAME batch (the streaming checkpoint contract)
-    upsert_batch(batch, p, KEYS, "seq", n_buckets=4,
-                 commit_mode="manifest")
+    upsert_batch(batch, p, KEYS, "seq", n_buckets=4)
     assert _state(spark, p) == {i: f"V{i}" for i in range(8)}
 
 
@@ -305,14 +264,13 @@ def test_manifest_upsert_matches_dict_model(
                 # no raise is legitimate when the batch performs no
                 # pointer swap (deletes of never-stored keys)
                 upsert_batch(batch, p, KEYS, "seq", n_buckets=4,
-                             delete_col="deleted",
-                             commit_mode="manifest")
+                             delete_col="deleted")
             except RuntimeError:
                 pass
             finally:
                 cm._replace = real_replace
         upsert_batch(batch, p, KEYS, "seq", n_buckets=4,
-                     delete_col="deleted", commit_mode="manifest")
+                     delete_col="deleted")
         for k, v in batch_model.items():
             if v is None:
                 model.pop(k, None)

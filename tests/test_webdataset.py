@@ -317,8 +317,7 @@ def test_manifest_commit_selective_reexport_carry_forward(spark, tmp_path):
 
 def test_inplace_after_manifest_refused(spark, tmp_path):
     """Review fix: an inplace export into a pointer-managed directory
-    would write tars the resolving reader never sees — refused, the
-    commit_dir rename-mode guard applied here."""
+    would write tars the resolving reader never sees — refused."""
     out = str(tmp_path / "wds")
     write_webdataset_shards(
         _corpus(spark, n=6), out, n_shards=2, commit="manifest"
